@@ -34,6 +34,7 @@ from pytrs_spark.operators.parse import (
 )
 from pytrs_spark.pipeline import (
     assign_images_to_tiles,
+    assign_tile_boxes,
     polygon_layer_from_descs,
 )
 from pytrs_spark.spatial.knn import knn_section_corners
@@ -236,13 +237,10 @@ def q_raster_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     from pytrs_spark.lineage import run_checkpointed
     from pytrs_spark.raster import materialize_tiles
-    from pytrs_spark.spatial.grid import with_anchor
-    from pytrs_spark.spatial.join import assign_tiles_local, spatial_join
     polygons = polygon_layer_from_descs(datagen.gen_descs(spark))
     images = _points_from_orders(spark, sf_dir) \
         .withColumn('bytes', F.lit(None).cast('binary'))
-    assigned = assign_tiles_local(
-        spatial_join(with_anchor(images), polygons))
+    assigned = assign_tile_boxes(images, polygons)
     # Left on /tmp deliberately: the returned DataFrame lazily reads
     # these files (a few KB of tiles; the OS owns /tmp cleanup).
     workdir = tempfile.mkdtemp(prefix='q_raster_ckpt_')
@@ -4205,6 +4203,10 @@ def _tuned(fn):
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q = {k: _tuned(v) for k, v in _RAW_QUERIES.items()}
+    missing = [k for k in _R06_WINDOW if k not in q]
+    if missing:
+        raise ValueError('_R06_WINDOW names queries missing from '
+                         f'_RAW_QUERIES: {missing}')
     head = {k: q.pop(k) for k in _R06_WINDOW}
     head.update(q)
     return head
@@ -4220,7 +4222,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # PLSS/container block, the ANN ladder, and the r03 text metrics) so
 # the stalest greens get re-verified on the current tree.  All 107
 # entries remain declared; scripts/check_correctness.py sweeps them
-# all regardless of order.
+# all regardless of order.  Re-derive the list each round: a renamed
+# or removed query makes queries() raise, naming it.
 _R06_WINDOW = [
     # changed this round
     'exact_substr_trim', 'chunk_docs', 'knn_corners', 'gap_fill',

@@ -29,10 +29,16 @@ Physical tables are parquet here (no Iceberg runtime in this sandbox);
 on a cluster with the Iceberg runtime jar the same calls target
 ``format("iceberg")`` -- the write/read API below is format-agnostic
 via ``LINEAGE_FORMAT``.
+
+Lineage rows reach Spark as an Arrow table, never as a Python list: a
+list ``createDataFrame`` runs a Python RDD, whose worker environment
+differs from the SQL path's, so Spark starts a second worker daemon
+and pool beside the one the UDF stages use.
 """
 
 import time
 
+import pyarrow as pa
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -172,8 +178,14 @@ def run_checkpointed(spark: SparkSession, source: DataFrame,
         agg = {}
     wall = round(time.time() - t0, 3)
     now = time.time()
-    rows = [(b, n_in.get(b, 0), agg.get(b, (0, 0))[0], wall,
-             agg.get(b, (0, 0))[1], run_id, now) for b in batch]
+    rows = pa.table({
+        'bucket': batch,
+        'n_in': [n_in.get(b, 0) for b in batch],
+        'n_out': [agg.get(b, (0, 0))[0] for b in batch],
+        'wall_s': [wall] * len(batch),
+        'checksum': [agg.get(b, (0, 0))[1] for b in batch],
+        'run_id': [run_id] * len(batch),
+        'finished_at': [now] * len(batch)})
     spark.createDataFrame(rows, _LINEAGE_SCHEMA) \
         .write.mode('append').format(LINEAGE_FORMAT).save(lineage_path)
     if fail_after is not None and len(pending) > len(batch):

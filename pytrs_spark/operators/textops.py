@@ -2346,8 +2346,10 @@ def chunk_documents(docs: DataFrame, max_tokens: int,
     # cost.  Instead the start-offset array is empty for token-less
     # docs (`when` guards the sequence, whose bounds would otherwise
     # be illegal at _n <= 0), so the posexplode Generate emits zero
-    # rows for them natively: null text -> _t null -> size = -1 ->
-    # empty starts, matching the documented "no rows" contract.
+    # rows for them natively: null text -> _t null -> size(_t) is
+    # NULL or -1 (per spark.sql.legacy.sizeOfNull), and either fails
+    # _n > 0 -> empty starts, matching the documented "no rows"
+    # contract.
     base = (docs.select(F.col(id_col), toks.alias('_t'))
             .withColumn('_n', F.size('_t')))
     starts = F.when(

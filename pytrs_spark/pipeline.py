@@ -8,7 +8,10 @@ assign each image to its (trs, qq) aliquot tile.
     points ⋈ broadcast(poly cell index) ──PIP──▶ matches ──▶ tiles
 
 ``bytes`` never enters the join path (late projection); the raster
-stage re-joins it by image_id.
+stage re-joins it by image_id.  Raster tiles assign through the same
+fused path as the flagship (:func:`run_raster`), so both hold at most
+one Python stage per task: the ``mapInArrow`` kernel where the layer
+overlaps or mixes ring arities, none where it is a uniform tiling.
 """
 
 from pyspark.sql import DataFrame
@@ -16,12 +19,7 @@ from pyspark.sql import functions as F
 
 from .operators.parse import parse_documents_full
 from .spatial.grid import build_polygon_layer, with_anchor
-from .spatial.join import (
-    JOIN_RES,
-    assign_tiles_fused,
-    assign_tiles_local,
-    spatial_join,
-)
+from .spatial.join import JOIN_RES, assign_tiles_fused
 
 
 def polygon_layer_from_descs(descs: DataFrame,
@@ -59,7 +57,7 @@ def assign_images_to_tiles(images: DataFrame, polygons: DataFrame,
     # pid instead of ring arrays, and NOTHING shuffles end to end
     # (see assign_tiles_fused; row-identical to the unfused
     # spatial_join -> assign_tiles_local composition, which remains
-    # for stage-level tests).
+    # for the oversize-layer tier and as the test reference).
     return assign_tiles_fused(points, polygons, res=res, salt=salt,
                               payload_cols=payload_cols)
 
@@ -70,13 +68,29 @@ def run_flagship(spark, images: DataFrame, descs: DataFrame,
     return assign_images_to_tiles(images, polygons, salt=salt)
 
 
+def assign_tile_boxes(images: DataFrame, polygons: DataFrame) -> DataFrame:
+    """The raster stage's assignment: ``image_id, x, y, trs, qq`` plus
+    the winning aliquot's box ``xmin, ymin, xmax, ymax``.
+
+    Assigns through the flagship's fused path (reusing the prep
+    memoized on ``polygons``) and attaches each box by a broadcast
+    join on ``(trs, qq)``, which is unique in a layer from
+    :func:`build_polygon_layer` (it deduplicates on that key)."""
+    assigned = assign_tiles_fused(with_anchor(images), polygons,
+                                  payload_cols=('x', 'y'))
+    boxes = polygons.select('trs', 'qq', 'xmin', 'ymin', 'xmax', 'ymax')
+    return assigned.join(F.broadcast(boxes), ['trs', 'qq'])
+
+
 def run_raster(images: DataFrame, polygons: DataFrame,
                tile_px: int = 64, patch_px: int = 16) -> DataFrame:
     """G8 end to end: assign tiles on the bytes-free projection, then
     re-join ``bytes`` by image_id and composite one raster per
-    (trs, qq) aliquot."""
+    (trs, qq) aliquot.
+
+    Raster shares the flagship's fused assignment
+    (:func:`assign_tile_boxes`), so it holds at most one Python worker
+    per task slot."""
     from .raster import materialize_tiles
-    points = with_anchor(images)
-    assigned = assign_tiles_local(spatial_join(points, polygons))
-    return materialize_tiles(assigned, images,
+    return materialize_tiles(assign_tile_boxes(images, polygons), images,
                              tile_px=tile_px, patch_px=patch_px)

@@ -28,6 +28,35 @@ def tune_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def default_cores() -> int:
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on (its
+    affinity mask, which a container or ``taskset`` narrows below the
+    machine's count)."""
+    if os.environ.get("SPARK_GRAFT_CPUS"):
+        return int(os.environ["SPARK_GRAFT_CPUS"])
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def default_driver_memory(meminfo="/proc/meminfo") -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else half of the host's ``MemTotal``
+    clamped to 1-48 GB (48 GB without a readable ``meminfo``).  Under
+    ``local[N]`` the driver JVM is also the executor, so its heap holds
+    every task's working set; the other half of RAM stays for the
+    Python workers, the driver's Python process and the page cache."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    cap_mb = 48 * 1024
+    try:
+        with open(meminfo) as f:
+            kb = next(int(line.split()[1]) for line in f
+                      if line.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return f"{cap_mb}m"
+    return f"{max(1024, min(cap_mb, kb // 2048))}m"
+
+
 def get_spark(app_name="pytrs_spark", cores=None, shuffle_partitions=None,
               extra_conf=None, master=None) -> SparkSession:
     """Build the tuned session.
@@ -39,9 +68,12 @@ def get_spark(app_name="pytrs_spark", cores=None, shuffle_partitions=None,
     and the master the scaling probe uses for its executor-mode legs.
     ``cores`` still sizes shuffle partitions in that case (pass total
     cores across executors).
+
+    ``cores`` and the driver heap default to the host's
+    (:func:`default_cores`, :func:`default_driver_memory`).
     """
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cores()
     if master is None:
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cores}]")
     if shuffle_partitions is None:
@@ -85,8 +117,7 @@ def get_spark(app_name="pytrs_spark", cores=None, shuffle_partitions=None,
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 os.environ.get("SPARK_GRAFT_ARROW_BATCH", "65536"))
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.log.level", "WARN")
         # Separate-JVM executors (local-cluster / standalone) do not

@@ -63,6 +63,101 @@ def test_materialize_tiles_deterministic(spark, polygons):
     assert pixels.any()
 
 
+def _tile_rows(df):
+    return sorted((r['trs'], r['qq'], r['n_images'], r['checksum'])
+                  for r in df.collect())
+
+
+def _python_nodes(df):
+    """Class names of the Python-running nodes in ``df``'s final
+    executed plan (AQE query stages unwrapped; a cached relation is a
+    leaf, so its own lineage is not counted)."""
+    root = df._jdf.queryExecution().executedPlan()
+    names, stack = set(), [root]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == 'AdaptiveSparkPlanExec':
+            stack.append(node.finalPhysicalPlan())
+            continue
+        if name.endswith('QueryStageExec'):
+            stack.append(node.plan())
+            continue
+        if 'Python' in name or 'Pandas' in name or 'Arrow' in name:
+            names.add(name)
+        stack.extend(node.children().apply(i)
+                     for i in range(node.children().length()))
+    return names
+
+
+def test_run_raster_holds_one_python_stage(spark, polygons, tmp_path):
+    """Raster assigns through the fused path: no ArrowEvalPython ray
+    cast and no mapInPandas reduction, only the per-tile composite.
+    Images are read back from parquet (the in-memory generator is
+    itself a MapInPandas stage)."""
+    path = str(tmp_path / 'imgs')
+    datagen.gen_images(spark, 200, with_bytes=True, partitions=4) \
+        .write.parquet(path)
+    tiles = run_raster(spark.read.parquet(path), polygons,
+                       tile_px=32, patch_px=8)
+    assert sum(r[2] for r in _tile_rows(tiles)) == 200
+    assert _python_nodes(tiles) == {'FlatMapGroupsInPandasExec'}
+
+
+def test_run_raster_matches_unfused_on_overlapping_layer(spark, polygons):
+    """On an overlapping layer (a whole-section 'ALL' box over its 16
+    QQs: the fused path's kernel-reduction tier), run_raster's tiles
+    equal materialize_tiles over the unfused reference composition,
+    box and tie-break included ('ALL' < 'NENE' wins every image in the
+    section)."""
+    from pytrs_spark.raster import materialize_tiles
+    from pytrs_spark.spatial.grid import with_anchor
+    from pytrs_spark.spatial.join import assign_tiles_local, spatial_join
+    some = (f"{datagen.DENSE_TWP}n{datagen.DENSE_RGE}w"
+            f"{datagen.DENSE_SEC}")
+    extra = polygons.filter(F.col('trs') == some).groupBy('trs').agg(
+        F.lit('ALL').alias('qq'), F.lit(0).alias('depth'),
+        F.min('xmin').alias('xmin'), F.min('ymin').alias('ymin'),
+        F.max('xmax').alias('xmax'), F.max('ymax').alias('ymax'))
+    extra = extra.select(
+        'trs', 'qq', 'depth', 'xmin', 'ymin', 'xmax', 'ymax',
+        F.array('xmin', 'xmax', 'xmax', 'xmin').alias('ring_xs'),
+        F.array('ymin', 'ymin', 'ymax', 'ymax').alias('ring_ys'))
+    overlapping = polygons.unionByName(extra)
+    images = datagen.gen_images(spark, 300, with_bytes=True, partitions=4)
+    got = _tile_rows(run_raster(images, overlapping,
+                                tile_px=32, patch_px=8))
+    ref = assign_tiles_local(spatial_join(with_anchor(images),
+                                          overlapping))
+    want = _tile_rows(materialize_tiles(ref, images,
+                                        tile_px=32, patch_px=8))
+    assert got == want
+    assert (some, 'ALL') in {(t, q) for t, q, _, _ in got}
+
+
+def test_lineage_rows_run_no_python_rdd(spark, tmp_path, monkeypatch):
+    """Lineage rows reach Spark through Arrow: a Python-list
+    createDataFrame would run a Python RDD (``sc.parallelize``), whose
+    workers form a second pool beside the UDF stages' one."""
+    from pyspark import SparkContext
+    images = datagen.gen_images(spark, 60, with_bytes=False, partitions=2)
+
+    def python_rdd(*args, **kwargs):
+        raise AssertionError('run_checkpointed ran a Python RDD')
+
+    with monkeypatch.context() as m:
+        m.setattr(SparkContext, 'parallelize', python_rdd)
+        n = run_checkpointed(spark, images, lambda df: df,
+                             str(tmp_path / 'out'), str(tmp_path / 'lin'),
+                             n_buckets=3, run_id='arrow')
+    assert n == 3
+    metrics = lineage_metrics(spark, str(tmp_path / 'lin')).collect()
+    assert sorted(m['bucket'] for m in metrics) == [0, 1, 2]
+    assert sum(m['n_in'] for m in metrics) == 60
+    assert all(m['n_in'] == m['n_out'] and m['run_id'] == 'arrow'
+               for m in metrics)
+
+
 def test_lineage_resume(spark, tmp_path):
     out = str(tmp_path / 'out')
     lin = str(tmp_path / 'lineage')
