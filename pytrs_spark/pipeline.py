@@ -5,13 +5,16 @@ assign each image to its (trs, qq) aliquot tile.
     descs ──parse_documents──▶ tracts ──parse_tract_details──▶ qqs
           ──decompose_trs──▶ numeric keys ──build_polygon_layer──▶ polys
     images ──with_anchor (no bytes!)──▶ points
-    points ⋈ broadcast(poly cell index) ──PIP──▶ matches ──▶ tiles
+    points ⋈ poly cell index ──native ray cast──▶ matches ──▶ tiles
 
-``bytes`` never enters the join path (late projection); the raster
-stage re-joins it by image_id.  Raster tiles assign through the same
-fused path as the flagship (:func:`run_raster`), so both hold at most
-one Python stage per task: the ``mapInArrow`` kernel where the layer
-overlaps or mixes ring arities, none where it is a uniform tiling.
+Every assignment runs :func:`~.spatial.join.assign_tiles_fused`: a
+broadcast index by default, a (salted) sort-merge join when ``salt >
+0`` or the layer is too big to collect.  ``bytes`` never enters the
+join path (late projection); the raster stage re-joins it by
+image_id.  Raster tiles assign through the same function as the
+flagship (:func:`run_raster`), so both hold at most one Python stage
+per task: the ``mapInArrow`` min-pid kernel where a broadcast layer
+overlaps, none where it is a tiling or on the shuffle strategy.
 """
 
 from pyspark.sql import DataFrame
@@ -45,27 +48,19 @@ def assign_images_to_tiles(images: DataFrame, polygons: DataFrame,
     the default payload keeps the caption and anchor x/y, i.e. the
     full historical output).  Pass ``payload_cols=()`` for the pure
     assignment (image_id, trs, qq) -- at 10^11-row scale payload
-    bytes through the Python crossing are the bottleneck (x/y still
-    feed the ray cast worker-side; they just don't cross back), and
+    bytes through the joins, exchanges and (on an overlapping
+    broadcast layer) the Python crossing are the bottleneck (x/y
+    still feed the ray cast; they just don't reach the output), and
     the late-materialization policy (re-join payload by image_id only
     where needed) is the same one that keeps ``bytes`` out of the
     join path.
     """
     points = with_anchor(images)
-    # One fused mapInArrow does cell-join refinement + PIP + winner
-    # reduction: the candidate stream through Arrow carries an int32
-    # pid instead of ring arrays, and NOTHING shuffles end to end
-    # (see assign_tiles_fused; row-identical to the unfused
-    # spatial_join -> assign_tiles_local composition, which remains
-    # for the oversize-layer tier and as the test reference).
+    # ``salt > 0`` picks the shuffle strategy (see assign_tiles_fused);
+    # otherwise the broadcast strategy runs unless the layer is too
+    # big to collect.
     return assign_tiles_fused(points, polygons, res=res, salt=salt,
                               payload_cols=payload_cols)
-
-
-def run_flagship(spark, images: DataFrame, descs: DataFrame,
-                 salt: int = 0) -> DataFrame:
-    polygons = polygon_layer_from_descs(descs)
-    return assign_images_to_tiles(images, polygons, salt=salt)
 
 
 def assign_tile_boxes(images: DataFrame, polygons: DataFrame) -> DataFrame:

@@ -1,35 +1,35 @@
-"""Spatial join: broadcast cell-index equi-join + exact ray-casting
-point-in-polygon refinement + deterministic tile assignment, with
-explicit salted-key skew handling.
+"""Spatial join: cell-index equi-join + exact even-odd ray cast +
+deterministic tile assignment, all in :func:`assign_tiles_fused`.
 
-Plan shape (the one we want at 100 TB):
+Plan shape:
 
-1. polygon layer -> explode covering cells at the join resolution ->
-   **broadcast** (the polygon-cell index is small: O(sections x 16)).
-2. images -> narrow projection (no ``bytes``) -> equi hash join on
-   ``cell`` against the broadcast index.  No shuffle of the image side
-   at all.
-3. exact PIP refinement in a vectorized numpy pandas UDF (even-odd ray
-   casting over the polygon ring; for half-open axis-aligned boxes the
-   crossing rule is exact and deterministic on shared edges).
-4. tile assignment: ``row_number() over (partition by image_id order
-   by trs, qq)`` -- deterministic smallest-key tie-break.
+1. polygon layer -> per-vertex ring columns ``_rx{k}`` / ``_ry{k}``
+   (rings shorter than the layer's longest are padded with their first
+   vertex) -> explode covering cells at the join resolution.
+2. images -> narrow projection (no ``bytes``) -> equi join on
+   ``cell``.
+3. exact point-in-polygon: the even-odd ray cast unrolled into native
+   codegen expressions over the ring columns (:func:`_ray_cast_expr`;
+   for half-open axis-aligned boxes the crossing rule is exact and
+   deterministic on shared edges).
+4. tile assignment: the lexicographically smallest ``(trs, qq)`` among
+   an image's containing polygons wins.
 
-Skew: dense cells (many images in one cell) do NOT skew a broadcast
-join (no shuffle by cell).  The salt path exists for the shuffle-join
-variant (forced when the polygon side exceeds the broadcast
-threshold): images get ``salt = pmod(xxhash64(image_id), S)``, the
-polygon-cell index is exploded x S, and the join key becomes
-``(cell, salt)`` -- plus AQE skew-join as belt and braces.
+Two join strategies:
+
+- **broadcast** (default): the layer is collected once into a
+  broadcast ``(cell, pid, ring)`` index.  No image-side exchange, so a
+  dense cell cannot skew it.
+- **shuffle** (``salt > 0``, or a layer whose size estimate exceeds
+  the prep cap): the index is built natively and never collected, and
+  both sides meet in a sort-merge join on ``cell``.  With salt S,
+  images carry ``salt = pmod(xxhash64(image_id), S)`` and the index is
+  exploded x S, so one hot cell spreads over S shuffle partitions.
 """
 
-import warnings
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .grid import cover_cells
 
@@ -68,9 +68,9 @@ def _bboxes_disjoint(xmin, ymin, xmax, ymax) -> bool:
 def _ray_cast_expr(m: int, xc, yc):
     """The exact even-odd ray cast, unrolled into NATIVE whole-stage-
     codegen expressions over per-vertex scalar columns ``_rx{k}`` /
-    ``_ry{k}`` -- arithmetic-identical to the numpy kernel (same
-    divide form, same strict comparisons), so borderline points land
-    the same way on every execution tier.
+    ``_ry{k}``, ``k < m``.  Edge k runs (v[k], v[(k+1) % m]); a ring
+    padded with its first vertex adds only degenerate (v0, v0) edges,
+    which never cross, so the cast is exact for any vertex count.
 
     The division is guarded by ``when(y2 != y1, ...)`` because Spark
     4 runs ANSI by default (division by zero raises); a crossing edge
@@ -90,420 +90,100 @@ def _ray_cast_expr(m: int, xc, yc):
     return inside
 
 
-def polygon_cell_index(polygons: DataFrame, res: int = JOIN_RES) -> DataFrame:
-    """Explode each polygon to its covering cells at ``res`` (native)."""
-    return polygons.select(
-        'trs', 'qq', 'xmin', 'ymin', 'xmax', 'ymax',
-        'ring_xs', 'ring_ys',
-        F.explode(cover_cells(
-            F.col('xmin'), F.col('ymin'), F.col('xmax'), F.col('ymax'),
-            res)).alias('cell'))
-
-
-@F.pandas_udf(T.BooleanType())
-def _pip_refine(px: pd.Series, py: pd.Series,
-                ring_xs: pd.Series, ring_ys: pd.Series) -> pd.Series:
-    """Exact even-odd ray-casting point-in-polygon, vectorized.
-
-    General simple-polygon implementation (not a bbox shortcut), per
-    the north rule; for axis-aligned half-open boxes the crossing rule
-    lands exactly on [xmin, xmax) x [ymin, ymax).
-
-    Rows are grouped by ring vertex count so every edge test runs as a
-    (rows, ) numpy op -- no per-row Python, no per-ring grouping (the
-    previous tuple-keyed groupby cost ~100 us/row and was the scaling
-    bottleneck of the whole join).
-    """
-    x = px.to_numpy(dtype=np.float64)
-    y = py.to_numpy(dtype=np.float64)
-    n = len(x)
-    inside = np.zeros(n, dtype=bool)
-    lens = ring_xs.map(len).to_numpy()
-    for m in np.unique(lens):
-        ii = np.nonzero(lens == m)[0]
-        xs = np.array([ring_xs.iat[i] for i in ii], dtype=np.float64)
-        ys = np.array([ring_ys.iat[i] for i in ii], dtype=np.float64)
-        pxs, pys = x[ii], y[ii]
-        hit = np.zeros(len(ii), dtype=bool)
-        for k in range(m):
-            x1, y1 = xs[:, k], ys[:, k]
-            x2, y2 = xs[:, (k + 1) % m], ys[:, (k + 1) % m]
-            crosses = (y1 > pys) != (y2 > pys)
-            with np.errstate(divide='ignore', invalid='ignore'):
-                xint = (x2 - x1) * (pys - y1) / (y2 - y1) + x1
-            hit ^= crosses & (pxs < xint)
-        inside[ii] = hit
-    return pd.Series(inside)
-
-
-def spatial_join(points: DataFrame, polygons: DataFrame,
-                 res: int = JOIN_RES, broadcast_index: bool = True,
-                 salt: int = 0) -> DataFrame:
-    """points (with ``cell{res}``, ``x``, ``y``) x polygons -> matched
-    candidate rows refined by exact PIP.
-
-    ``salt > 0`` switches to the salted shuffle-join path for the
-    case where the polygon-cell index outgrows the broadcast
-    threshold: images carry ``pmod(xxhash64(image_id), salt)`` and the
-    index is exploded x salt, so one hot cell spreads over ``salt``
-    shuffle partitions.
-    """
-    index = polygon_cell_index(polygons, res)
-    cell_col = f'cell{res}'
-    pts = points.withColumnRenamed(cell_col, 'cell')
-
-    if salt > 0:
-        pts = pts.withColumn(
-            'salt', F.pmod(F.xxhash64('image_id'), F.lit(salt)))
-        index = index.withColumn(
-            'salt', F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))) \
-            .withColumn('salt', F.col('salt').cast('long'))
-        joined = pts.join(index, ['cell', 'salt'])
-    else:
-        if broadcast_index:
-            index = F.broadcast(index)
-        joined = pts.join(index, 'cell')
-
-    return joined.filter(
-        _pip_refine(F.col('x'), F.col('y'),
-                    F.col('ring_xs'), F.col('ring_ys')))
-
-
-def assign_tiles(matches: DataFrame) -> DataFrame:
-    """One deterministic (trs, qq) tile per image: smallest (trs, qq)
-    wins (explicit tie-break so output is byte-stable under any
-    parallelism).
-
-    Implemented as ``min(struct(trs, qq, payload...))`` rather than a
-    ``row_number`` window: lexicographic struct-min is the same
-    tie-break but gets map-side partial aggregation, so the shuffle
-    carries ~1 row per image instead of every candidate row sorted.
-    """
-    # The ring vertex arrays are polygon-side working data; the tile
-    # row doesn't need them (and arrays through an agg cost memory).
-    payload = [c for c in matches.columns
-               if c not in ('image_id', 'trs', 'qq',
-                            'ring_xs', 'ring_ys')]
-    best = F.min(F.struct('trs', 'qq', *payload)).alias('_best')
-    agg = matches.groupBy('image_id').agg(best)
-    return agg.select(
-        'image_id',
-        F.col('_best')['trs'].alias('trs'),
-        F.col('_best')['qq'].alias('qq'),
-        *[F.col('_best')[c].alias(c) for c in payload])
-
-
-def assign_tiles_local(matches: DataFrame) -> DataFrame:
-    """Zero-shuffle tile assignment for candidate streams where each
-    image's candidates are CONTIGUOUS WITHIN ONE PARTITION -- which is
-    exactly what :func:`spatial_join` produces: one probe row per
-    image, and both the broadcast hash join and the salted shuffle
-    join emit all matches of a probe row consecutively (the salted
-    path also co-locates them, since an image has a single
-    (cell, salt) key).
-
-    Same output and tie-break as :func:`assign_tiles` (lexicographic
-    min over (trs, qq); (trs, qq) is unique per image's candidate set,
-    so the payload never participates) -- but implemented as a
-    partition-local streaming reduction with an O(1) carry row across
-    Arrow batches, so NOTHING shuffles.  At 96M images the struct-min
-    groupBy exchanged ~the whole candidate set (~11 GB serialized
-    through one node's shuffle machinery) and flattened the core-
-    scaling curve; this path removes that exchange entirely.  Measured
-    (BENCH.md): the global-agg form ran local[32] == local[8] at 96M
-    rows (shuffle-bound); this form restores compute-bound scaling.
-
-    Falls back conceptually to :func:`assign_tiles` for inputs with
-    arbitrary provenance -- keep using that one when candidates may
-    span partitions.
-    """
-    work = matches.drop('ring_xs', 'ring_ys')
-    schema = work.schema
-
-    def reduce_partition(batches):
-        # Kernel: consecutive-run boundaries in numpy, then a Python
-        # loop over MULTI-candidate runs only (most images have 1-3
-        # candidates; a pandas groupby-transform here measured ~80x
-        # slower -- 13.7 s vs 0.17 s per 420k rows).
-        carry = None            # one-row pdf: best-so-far of last id
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if carry is not None:
-                if pdf['image_id'].iat[0] == carry['image_id'].iat[0]:
-                    pdf = pd.concat([carry, pdf], ignore_index=True)
-                else:
-                    yield carry
-                carry = None
-            idv = pdf['image_id'].to_numpy()
-            n = len(idv)
-            new = np.empty(n, dtype=bool)
-            new[0] = True
-            new[1:] = idv[1:] != idv[:-1]
-            starts = np.flatnonzero(new)
-            lens = np.diff(np.append(starts, n))
-            sel = starts.copy()
-            multi = np.flatnonzero(lens > 1)
-            if len(multi):
-                trs_v = pdf['trs'].to_numpy()
-                qq_v = pdf['qq'].to_numpy()
-                for mi in multi:
-                    s = starts[mi]
-                    best = s
-                    for j in range(s + 1, s + lens[mi]):
-                        if ((trs_v[j], qq_v[j])
-                                < (trs_v[best], qq_v[best])):
-                            best = j
-                    sel[mi] = best
-            best_rows = pdf.iloc[sel]
-            if idv[0] == idv[-1] and len(sel) == 1:
-                carry = best_rows      # whole batch is one image
-                continue
-            carry = best_rows.iloc[[-1]]
-            yield best_rows.iloc[:-1]
-        if carry is not None and len(carry):
-            yield carry
-
-    return work.mapInPandas(reduce_partition, schema=schema)
-
-
 # Driver-side polygon prep is a broadcast-index build: fine for a
 # bench-scale QQ layer (~37k rows, a few MB) but a continental PLSS
 # extent is 10^7-10^8 polygons x ring arrays -- a multi-GB driver
-# materialization.  Above this cap the fused path refuses to collect
-# and falls back to the (already exchange-safe) shuffle join.  Same
-# 64 MB convention as the bitmap-verify gate in textops.py.
+# materialization.  Above this cap the layer is never collected and
+# the shuffle strategy runs instead.  Same 64 MB convention as the
+# bitmap-verify gate in textops.py.
 FUSED_PREP_MAX_BYTES = 64 << 20
 
 
-def assign_tiles_fused(points: DataFrame, polygons: DataFrame,
-                       res: int = JOIN_RES, salt: int = 0,
-                       payload_cols=('caption', 'x', 'y'),
-                       max_prep_bytes: int = FUSED_PREP_MAX_BYTES
-                       ) -> DataFrame:
-    """cell join + exact PIP + deterministic tile assignment, with
-    the Python crossing reduced to the minimum the layer's geometry
-    requires -- row-identical to ``assign_tiles_local(
-    spatial_join(...))`` on every tier (the tile_assign oracle gate
-    runs against this path).
+def _layer_stats(polygons: DataFrame, memo: dict) -> tuple:
+    """``(rows, size estimate in bytes, longest ring)`` of the layer:
+    one skinny agg job, memoized with the prep, so the size decision
+    never collects the layer itself."""
+    stats = memo.get('stats')
+    if stats is None:
+        r = polygons.agg(
+            F.count('*').alias('n'),
+            F.avg(F.size('ring_xs')).alias('m'),
+            F.max(F.size('ring_xs')).alias('max_m')).collect()[0]
+        # rows x (2 ring arrays x avg arity x 8 B + bbox/keys overhead)
+        est_bytes = int(r['n'] * (16.0 * float(r['m'] or 0.0) + 96.0))
+        stats = memo['stats'] = (r['n'], est_bytes, r['max_m'] or 0)
+    return stats
 
-    Execution tiers, picked from *verified* properties of the
-    collected polygon layer at prep time (never assumed):
 
-    1. **Uniform ring arity + pairwise-disjoint bboxes** (the common
-       case -- a tiling, e.g. PLSS aliquot tiles): the ray cast
-       unrolls into native codegen expressions and the winner
-       reduction is provably the identity, so the whole assignment is
-       JVM-native -- NO Python stage, hence none of the worker-socket
-       bandwidth ceiling the 96M probes measured (BENCH.md).
-    2. **Uniform arity, overlapping polygons**: native codegen ray
-       cast, then a ``mapInArrow`` kernel that only reduces min-pid
-       per image over the ~1 surviving candidate row per image.
-    3. **Variable arity**: the general Arrow kernel does both the ray
-       cast and the reduction (the original shape below).
+def _broadcast_prep(polygons: DataFrame, res: int) -> tuple:
+    """Collect the layer once into ``(max_m, disjoint, index, dim)``:
+    the cached ``(pid, _rx*/_ry*, cell)`` index, the cached
+    ``(pid, trs, qq)`` dim, and whether the bboxes are pairwise
+    disjoint.  ``pid`` numbers polygons in ``(trs, qq)`` order, so the
+    tie-break is ``min(pid)``."""
+    spark = polygons.sparkSession
+    pdf = (polygons.select('trs', 'qq', 'xmin', 'ymin',
+                           'xmax', 'ymax', 'ring_xs', 'ring_ys')
+           .toPandas().sort_values(['trs', 'qq'])
+           .reset_index(drop=True))
+    n_poly = len(pdf)
+    max_m = int(pdf['ring_xs'].map(len).max())
+    # Pad each ring with its first vertex (see _ray_cast_expr).
+    rxs = np.empty((n_poly, max_m), dtype=np.float64)
+    rys = np.empty((n_poly, max_m), dtype=np.float64)
+    for i, (vx, vy) in enumerate(zip(pdf['ring_xs'], pdf['ring_ys'])):
+        m = len(vx)
+        rxs[i, :m] = vx
+        rys[i, :m] = vy
+        rxs[i, m:] = vx[0]
+        rys[i, m:] = vy[0]
+    # A layer whose bboxes are pairwise disjoint (the common case: a
+    # tiling -- PLSS aliquot tiles partition the plane) assigns every
+    # point to AT MOST ONE polygon, so the min-pid winner reduction is
+    # the identity.  Verified, never assumed.
+    disjoint = _bboxes_disjoint(
+        pdf['xmin'].to_numpy(), pdf['ymin'].to_numpy(),
+        pdf['xmax'].to_numpy(), pdf['ymax'].to_numpy())
+    # The index carries the ring vertices as per-vertex SCALAR columns
+    # so the native ray cast reads plain doubles (no array allocation
+    # per candidate row); it stays bounded -- O(polygons x cover
+    # cells) rows.
+    ring_cols = {}
+    for k in range(max_m):
+        ring_cols[f'_rx{k}'] = rxs[:, k]
+        ring_cols[f'_ry{k}'] = rys[:, k]
+    bbox = spark.createDataFrame(
+        pdf[['xmin', 'ymin', 'xmax', 'ymax']].assign(
+            pid=np.arange(n_poly, dtype=np.int64), **ring_cols),
+        'xmin double, ymin double, xmax double, ymax double, pid long'
+        + ''.join(f', _rx{k} double, _ry{k} double'
+                  for k in range(max_m)))
+    index = bbox.select(
+        F.col('pid').cast('int').alias('pid'),
+        *ring_cols,
+        F.explode(cover_cells(
+            F.col('xmin'), F.col('ymin'), F.col('xmax'),
+            F.col('ymax'), res)).alias('cell')).cache()
+    index.count()
+    dim = spark.createDataFrame(
+        pdf[['trs', 'qq']].assign(pid=np.arange(n_poly, dtype=np.int64)),
+        'trs string, qq string, pid long') \
+        .select(F.col('pid').cast('int').alias('pid'),
+                'trs', 'qq').cache()
+    dim.count()
+    return max_m, disjoint, index, dim
 
-    For tiers 2-3, the crossing is engineered so the bytes through
-    the JVM<->Python boundary are the minimum the semantics allow:
 
-    - The join output carries ``pid`` (int32 into the broadcast
-      polygon table) instead of the two ring vertex arrays -- ~4 B/row
-      through Arrow where the ring arrays cost ~80+ B/row.
-    - ``mapInArrow``, not ``mapInPandas``: winner rows are
-      ``pc.take``-d straight out of the input buffers; string values
-      (image ids, payload) never materialize as Python objects.
-    - The Python stage RETURNS ``pid``; the winner's ``(trs, qq)``
-      attach JVM-side via a broadcast hash join against the tiny
-      ``(pid, trs, qq)`` dim -- 4 B/row crosses the socket instead of
-      ~14 B of strings.
-    - ``payload_cols`` (default the image caption) ride through the
-      crossing only when the caller wants them in the output --
-      late-materialization, same policy that keeps ``bytes`` out of
-      the join path.  Pass ``()`` for the pure assignment.
-    - ``pid`` doubles as the tie-break: polygons are sorted by
-      ``(trs, qq)`` when collected, so the winner per image is
-      ``min(pid)`` -- an integer reduction, no string compares.
-    - Driver-side prep (polygon collect, ring matrices, exploded cell
-      index) is memoized on the ``polygons`` DataFrame: build the dim
-      index once, stream images against it forever.
+def _min_pid_kernel(n_out: int):
+    """``mapInArrow`` kernel for overlapping layers: the min-pid row
+    per image, as its first ``n_out`` columns plus ``pid``.
 
-    The polygon table is bounded (O(sections x aliquots) rows; ~37k at
-    bench scale, a few MB as numpy) -- small-dim broadcast is the
-    same contract the broadcast hash join relied on.  ``salt > 0`` is
-    a NO-OP here (warned): salting spreads a hot key across exchange
-    partitions, and the broadcast path has no probe-side exchange --
-    use the shuffle join (:func:`spatial_join`) when salting matters.
-    """
-    spark = points.sparkSession
-    dt = dict(points.dtypes)
-    payload_cols = tuple(payload_cols)
-    # x/y are always KERNEL inputs (the ray cast needs them) but only
-    # cross back to the JVM when the caller asked for them -- the
-    # pure assignment returns (image_id, pid): 19 B/row instead of 35.
-    extra_xy = [c for c in ('x', 'y') if c not in payload_cols]
-    in_cols = ['image_id', *payload_cols, *extra_xy]
-    n_out = 1 + len(payload_cols)       # python-stage output columns
-    out_cols = ['image_id', *payload_cols, 'trs', 'qq']
-    py_schema = ', '.join(
-        [f"image_id {dt['image_id']}"]
-        + [f'{c} {dt[c]}' for c in payload_cols]
-        + ['pid int'])
-    empty_schema = ', '.join(
-        [f"image_id {dt['image_id']}"]
-        + [f'{c} {dt[c]}' for c in payload_cols]
-        + ['trs string', 'qq string'])
-
-    prep_cache = getattr(polygons, '_fused_prep', None)
-    if prep_cache is None:
-        prep_cache = {}
-        polygons._fused_prep = prep_cache
-    prep = prep_cache.get(res)
-    if prep is None:
-        # Size the layer BEFORE collecting it (one skinny agg job,
-        # memoized with the prep): rows x (2 ring arrays x avg arity
-        # x 8 B + bbox/keys overhead).  Over the cap, never toPandas
-        # -- hand off to the shuffle-join path below.
-        stats = polygons.agg(
-            F.count('*').alias('_n'),
-            F.avg(F.size('ring_xs')).alias('_m')).collect()[0]
-        est_bytes = int((stats['_n'] or 0)
-                        * (16.0 * float(stats['_m'] or 0.0) + 96.0))
-        if est_bytes > max_prep_bytes:
-            prep_cache[res] = '_shuffle'
-            prep = '_shuffle'
-    if prep == '_shuffle':
-        joined = spatial_join(
-            points.select('image_id', *payload_cols, *extra_xy,
-                          f'cell{res}'),
-            polygons, res=res, broadcast_index=False, salt=salt)
-        return assign_tiles_local(joined).select(*out_cols)
-    if prep is None:
-        pdf = (polygons.select('trs', 'qq', 'xmin', 'ymin',
-                               'xmax', 'ymax', 'ring_xs', 'ring_ys')
-               .toPandas().sort_values(['trs', 'qq'])
-               .reset_index(drop=True))
-        if not len(pdf):
-            prep_cache[res] = ()
-            return spark.createDataFrame([], empty_schema)
-        ring_lens = pdf['ring_xs'].map(len).to_numpy()
-        max_m = int(ring_lens.max())
-        # Constant ring arity lets the exact even-odd ray cast unroll
-        # into NATIVE whole-stage-codegen expressions (no Python at
-        # all for the PIP); variable arity falls back to the Arrow
-        # kernel.
-        uniform_m = int(ring_lens[0]) \
-            if (ring_lens == ring_lens[0]).all() else 0
-        n_poly = len(pdf)
-        # Pad each ring with its first vertex: edge k runs (v[k],
-        # v[(k+1) % M]), so padded edges are degenerate (v0, v0)
-        # no-ops and edge (m-1 -> v0) is the true closing edge.  The
-        # kernel stays exact for ANY simple polygon, not just 4-boxes.
-        rxs = np.empty((n_poly, max_m), dtype=np.float64)
-        rys = np.empty((n_poly, max_m), dtype=np.float64)
-        for i, (vx, vy) in enumerate(zip(pdf['ring_xs'],
-                                         pdf['ring_ys'])):
-            m = len(vx)
-            rxs[i, :m] = vx
-            rys[i, :m] = vy
-            rxs[i, m:] = vx[0]
-            rys[i, m:] = vy[0]
-        # A layer whose bboxes are pairwise disjoint (the common case:
-        # a tiling -- PLSS aliquot tiles partition the plane) assigns
-        # every point to AT MOST ONE polygon, so the min-pid winner
-        # reduction is the identity and the whole assignment can run
-        # without any Python stage at all.  Verified, never assumed.
-        disjoint = bool(uniform_m) and _bboxes_disjoint(
-            pdf['xmin'].to_numpy(), pdf['ymin'].to_numpy(),
-            pdf['xmax'].to_numpy(), pdf['ymax'].to_numpy())
-        # (cell, pid) index and the (pid, trs, qq) dim from the SAME
-        # collected table (no re-parse of the polygon lineage); both
-        # cached so every reuse starts from materialized rows.  Under
-        # uniform arity the index also carries the ring vertices as
-        # per-vertex SCALAR columns so the native ray cast reads plain
-        # doubles (no array allocation per candidate row); the index
-        # stays bounded -- O(polygons x cover cells) rows.
-        ring_cols = {}
-        ring_schema = ''
-        if uniform_m:
-            for k in range(uniform_m):
-                ring_cols[f'_rx{k}'] = rxs[:, k]
-                ring_cols[f'_ry{k}'] = rys[:, k]
-            ring_schema = ''.join(
-                f', _rx{k} double, _ry{k} double'
-                for k in range(uniform_m))
-        bbox = spark.createDataFrame(
-            pdf[['xmin', 'ymin', 'xmax', 'ymax']].assign(
-                pid=np.arange(n_poly, dtype=np.int64), **ring_cols),
-            'xmin double, ymin double, xmax double, ymax double, '
-            'pid long' + ring_schema)
-        index = bbox.select(
-            F.col('pid').cast('int').alias('pid'),
-            *ring_cols,
-            F.explode(cover_cells(
-                F.col('xmin'), F.col('ymin'), F.col('xmax'),
-                F.col('ymax'), res)).alias('cell')).cache()
-        index.count()
-        dim = spark.createDataFrame(
-            pdf[['trs', 'qq']].assign(
-                pid=np.arange(n_poly, dtype=np.int64)),
-            'trs string, qq string, pid long') \
-            .select(F.col('pid').cast('int').alias('pid'),
-                    'trs', 'qq').cache()
-        dim.count()
-        prep = (rxs, rys, max_m, uniform_m, disjoint, index, dim)
-        prep_cache[res] = prep
-    elif prep == ():
-        return spark.createDataFrame([], empty_schema)
-    rxs, rys, max_m, uniform_m, disjoint, index, dim = prep
-
-    cell_col = f'cell{res}'
-    pts = points.select(*in_cols, F.col(cell_col).alias('cell'))
-    if salt > 0:
-        # Salting is a SHUFFLE-join concept: it spreads a hot join
-        # key across exchange partitions.  This path is a broadcast
-        # hash join -- there IS no probe-side exchange to spread (a
-        # hot cell's rows already sit wherever the input layout put
-        # them), so exploding the broadcast index x salt would only
-        # multiply the broadcast bytes for zero skew relief.  Keep
-        # the plain broadcast and point callers at the shuffle join,
-        # where the same salt actually works (tests pin row parity).
-        warnings.warn(
-            'assign_tiles_fused: salt has no effect on the broadcast '
-            'path (no probe-side exchange to spread); use '
-            'spatial_join/assign path for the salted shuffle join',
-            stacklevel=2)
-    cand = pts.join(F.broadcast(index), 'cell')
-    do_pip_in_kernel = uniform_m == 0
-    if do_pip_in_kernel:
-        reduce_in = in_cols
-        cand = cand.select(*in_cols, 'pid')
-        ix_x = in_cols.index('x')
-        ix_y = in_cols.index('y')
-    else:
-        # Exact even-odd ray cast UNROLLED into native expressions
-        # over the broadcast-side per-vertex columns: whole-stage
-        # codegen, zero Python for the PIP, zero extra bytes through
-        # any socket.
-        matched = cand.filter(_ray_cast_expr(uniform_m,
-                                             F.col('x'), F.col('y')))
-        reduce_in = ['image_id', *payload_cols]
-        if disjoint:
-            # Verified-disjoint layer: each image matches at most one
-            # polygon, the winner reduction is the identity, and the
-            # ENTIRE assignment is native -- scan -> anchor/cell exprs
-            # -> broadcast cell join -> codegen ray cast -> broadcast
-            # dim join.  No Python stage means no worker sockets: the
-            # single-host Arrow-bandwidth ceiling the 96M probes hit
-            # (BENCH.md) does not exist on this path.
-            return matched.select(*reduce_in, 'pid') \
-                .join(F.broadcast(dim), 'pid').select(*out_cols)
-        # Overlapping layer: x/y cross into the reduce kernel only as
-        # requested payload; the kernel just reduces min-pid per image.
-        cand = matched.select(*reduce_in, 'pid')
-        ix_x = ix_y = None
-    ix_pid = len(reduce_in)
-
-    def pip_assign(batches):
-        # Arrow-native kernel: value buffers are sliced/taken, never
+    Each image's candidates arrive as consecutive rows (one probe row
+    per image, and a broadcast hash join emits a probe row's matches
+    together), possibly split across batches, so one carried row per
+    task bridges batch boundaries."""
+    def reduce_min_pid(batches):
+        # Arrow-native: value buffers are sliced/taken, never
         # converted to Python objects.
         #
         # DEADLOCK-PROOF SHAPE: consume every input batch BEFORE
@@ -519,13 +199,11 @@ def assign_tiles_fused(points: DataFrame, polygons: DataFrame,
 
         acc = []                    # winner RecordBatches
         schema_pa = None
-        carry_id = None             # last raw image_id (python value)
-        carry_pid = None            # best surviving pid (None = none)
-        carry_vals = None           # python values of the winner row
+        carry_id = None             # image_id of the open run
+        carry_pid = None            # its best pid so far
+        carry_vals = None           # python values of that winner row
 
         def acc_carry():
-            # carry_vals covers every column except pid (the winner's
-            # own row values); pid is the reduced minimum.
             arrs = [pa.array([v], type=schema_pa.field(i).type)
                     for i, v in enumerate(carry_vals)]
             arrs.append(pa.array([carry_pid], type=pa.int32()))
@@ -540,117 +218,56 @@ def assign_tiles_fused(points: DataFrame, polygons: DataFrame,
                     [b.schema.field(i) for i in range(n_out)]
                     + [pa.field('pid', pa.int32())])
             ids = b.column(0)
-            pidv = b.column(ix_pid).to_numpy(zero_copy_only=False)
-            first_raw = ids[0].as_py()
-            last_raw = ids[n - 1].as_py()
-            if carry_id is not None and first_raw != carry_id:
-                if carry_pid is not None:
+            pids = b.column(n_out).to_numpy(zero_copy_only=False)
+            if carry_id is not None and ids[0].as_py() != carry_id:
+                acc_carry()
+                carry_id = None
+            # consecutive-id run boundaries, computed on the Arrow
+            # buffers (C-level compare, no objects)
+            new = np.empty(n, dtype=bool)
+            new[0] = True
+            if n > 1:
+                new[1:] = pc.not_equal(ids.slice(1), ids.slice(0, n - 1)) \
+                    .to_numpy(zero_copy_only=False)
+            run_ix = np.cumsum(new) - 1
+            # winner per run = row with min pid: lexsort by (run, pid),
+            # take the first row of each run group.
+            order = np.lexsort((pids, run_ix))
+            run_sorted = run_ix[order]
+            lead = np.empty(n, dtype=bool)
+            lead[0] = True
+            lead[1:] = run_sorted[1:] != run_sorted[:-1]
+            win = order[lead]               # row index, in run order
+            win_pids = pids[win]
+
+            def row_vals(ri):
+                return tuple(b.column(c)[ri].as_py()
+                             for c in range(n_out))
+
+            lo, hi = 0, len(win)
+            if carry_id is not None:
+                # the head run continues the carried image
+                if win_pids[0] < carry_pid:
+                    carry_pid = int(win_pids[0])
+                    carry_vals = row_vals(int(win[0]))
+                lo = 1
+            if hi > lo:
+                # a new image ends the batch: the carry is complete,
+                # and the tail run (which may continue in the next
+                # batch) becomes the carry
+                if carry_id is not None:
                     acc_carry()
-                carry_id = carry_pid = carry_vals = None
-
-            if do_pip_in_kernel:
-                # Exact even-odd ray cast against the closure rings;
-                # the (n, M) gathers replace per-row ring arrays
-                # through Arrow.
-                px = b.column(ix_x).to_numpy(zero_copy_only=False)
-                py = b.column(ix_y).to_numpy(zero_copy_only=False)
-                X = rxs[pidv]
-                Y = rys[pidv]
-                hit = np.zeros(n, dtype=bool)
-                for k in range(max_m):
-                    x1, y1 = X[:, k], Y[:, k]
-                    x2 = X[:, (k + 1) % max_m]
-                    y2 = Y[:, (k + 1) % max_m]
-                    crosses = (y1 > py) != (y2 > py)
-                    with np.errstate(divide='ignore',
-                                     invalid='ignore'):
-                        xint = (x2 - x1) * (py - y1) / (y2 - y1) + x1
-                    hit ^= crosses & (px < xint)
-                keep = np.flatnonzero(hit)
-            else:
-                keep = np.arange(n)
-            if len(keep):
-                if len(keep) == n:
-                    ids_f = ids
-                else:
-                    ids_f = pc.take(ids, pa.array(keep))
-                m = len(keep)
-                new = np.empty(m, dtype=bool)
-                new[0] = True
-                if m > 1:
-                    # consecutive-id run boundaries, computed on the
-                    # Arrow buffers (C-level compare, no objects)
-                    neq = pc.not_equal(ids_f.slice(1),
-                                       ids_f.slice(0, m - 1))
-                    new[1:] = neq.to_numpy(zero_copy_only=False)
-                run_ix = np.cumsum(new) - 1
-                pid_f = pidv[keep]
-                # winner per run = row with min pid: lexsort by
-                # (run, pid), take the first row of each run group.
-                order = np.lexsort((pid_f, run_ix))
-                run_sorted = run_ix[order]
-                lead = np.empty(len(order), dtype=bool)
-                lead[0] = True
-                lead[1:] = run_sorted[1:] != run_sorted[:-1]
-                w_pos = order[lead]             # index into keep[]
-                w_keep = keep[w_pos]            # raw row index
-                w_pids = pid_f[w_pos]
-
-                def row_vals(ri):
-                    return tuple(b.column(c)[ri].as_py()
-                                 for c in range(n_out))
-
-                lo = 0
-                hi = len(w_pos)
-                # merge batch-head run into carry
-                if carry_id is not None \
-                        and ids_f[w_pos[0]].as_py() == carry_id:
-                    if carry_pid is None or w_pids[0] < carry_pid:
-                        carry_pid = int(w_pids[0])
-                        carry_vals = row_vals(int(w_keep[0]))
-                    lo = 1
-                # tail run becomes (or merges into) the new carry
-                tail_is_open = hi > lo \
-                    and ids_f[w_pos[hi - 1]].as_py() == last_raw
-                if tail_is_open:
-                    hi -= 1
-                    t_pid = int(w_pids[hi])
-                    t_vals = row_vals(int(w_keep[hi]))
-                    if carry_id == last_raw:
-                        if carry_pid is None or t_pid < carry_pid:
-                            carry_pid = t_pid
-                            carry_vals = t_vals
-                    else:
-                        if carry_id is not None \
-                                and carry_pid is not None:
-                            acc_carry()
-                        carry_id = last_raw
-                        carry_pid = t_pid
-                        carry_vals = t_vals
-                elif carry_id != last_raw:
-                    if carry_id is not None and carry_pid is not None:
-                        acc_carry()
-                    carry_id = last_raw
-                    carry_pid = None
-                    carry_vals = None
-
-                if hi > lo:
-                    sel = pa.array(w_keep[lo:hi])
-                    arrs = [pc.take(b.column(c), sel)
-                            for c in range(n_out)]
-                    arrs.append(pa.array(
-                        w_pids[lo:hi].astype(np.int32),
-                        type=pa.int32()))
-                    acc.append(pa.record_batch(arrs, schema=schema_pa))
-            else:
-                # no survivors in this batch at all
-                if carry_id != last_raw:
-                    if carry_id is not None and carry_pid is not None:
-                        acc_carry()
-                    carry_id = last_raw
-                    carry_pid = None
-                    carry_vals = None
-        if carry_id is not None and carry_pid is not None:
+                hi -= 1
+                carry_id = ids[n - 1].as_py()
+                carry_pid = int(win_pids[hi])
+                carry_vals = row_vals(int(win[hi]))
+            if hi > lo:
+                sel = pa.array(win[lo:hi])
+                arrs = [pc.take(b.column(c), sel) for c in range(n_out)]
+                arrs.append(pa.array(win_pids[lo:hi].astype(np.int32),
+                                     type=pa.int32()))
+                acc.append(pa.record_batch(arrs, schema=schema_pa))
+        if carry_id is not None:
             acc_carry()
 
         # Input exhausted -- now stream the winners out in bounded
@@ -661,8 +278,124 @@ def assign_tiles_fused(points: DataFrame, polygons: DataFrame,
                     max_chunksize=65536):
                 yield ob
 
-    winners = cand.mapInArrow(pip_assign, schema=py_schema)
-    return winners.join(F.broadcast(dim), 'pid').select(*out_cols)
+    return reduce_min_pid
+
+
+def _shuffle_assign(pts: DataFrame, polygons: DataFrame, res: int,
+                    salt: int, max_m: int, payload_cols: tuple
+                    ) -> DataFrame:
+    """The shuffle strategy: the padded ring index is built natively
+    from ``polygons`` (never collected), joined to the images by a
+    sort-merge join on ``cell`` (plus ``salt``), and reduced with
+    ``min(struct(trs, qq, *payload_cols))``.  The aggregate groups by
+    the join keys plus ``image_id`` -- the same groups, since an
+    image has one cell and one salt -- so the join's hash
+    partitioning already satisfies it and no second exchange runs."""
+    ring_cols = []
+    for k in range(max_m):
+        for axis in 'xy':
+            ring = F.col(f'ring_{axis}s')
+            ring_cols.append(F.coalesce(
+                F.try_element_at(ring, F.lit(k + 1)),
+                F.try_element_at(ring, F.lit(1))).alias(f'_r{axis}{k}'))
+    index = polygons.select(
+        'trs', 'qq', *ring_cols,
+        F.explode(cover_cells(
+            F.col('xmin'), F.col('ymin'), F.col('xmax'),
+            F.col('ymax'), res)).alias('cell'))
+    keys = ['cell']
+    if salt > 0:
+        keys.append('salt')
+        pts = pts.withColumn(
+            'salt', F.pmod(F.xxhash64('image_id'), F.lit(salt)))
+        index = index.withColumn('salt', F.explode(
+            F.sequence(F.lit(0), F.lit(salt - 1)).cast('array<long>')))
+    best = F.min(F.struct('trs', 'qq', *payload_cols)).alias('_best')
+    # The merge hint keeps the planner (and AQE) from turning a small
+    # index into a broadcast, which would drop the exchange the salt
+    # spreads.
+    return (pts.join(index.hint('merge'), keys)
+            .filter(_ray_cast_expr(max_m, F.col('x'), F.col('y')))
+            .groupBy(*keys, 'image_id').agg(best)
+            .select('image_id', *[F.col('_best')[c].alias(c)
+                                  for c in (*payload_cols, 'trs', 'qq')]))
+
+
+def assign_tiles_fused(points: DataFrame, polygons: DataFrame,
+                       res: int = JOIN_RES, salt: int = 0,
+                       payload_cols=('caption', 'x', 'y'),
+                       max_prep_bytes: int = FUSED_PREP_MAX_BYTES
+                       ) -> DataFrame:
+    """The tile assignment: cell join + exact native ray cast + one
+    deterministic tile per image, the smallest ``(trs, qq)`` whose
+    polygon contains the image's anchor.  Images inside no polygon get
+    no row.  Output: ``image_id, *payload_cols, trs, qq``.
+
+    ``points`` need ``image_id``, ``x``, ``y``, ``cell{res}`` and the
+    payload columns; ``polygons`` need ``trs, qq``, the bbox and the
+    ``ring_xs`` / ``ring_ys`` vertex arrays.  ``payload_cols`` (default
+    the caption and anchor) ride along only when the caller wants them
+    -- late materialization, the same policy that keeps ``bytes`` out
+    of the join path.  Pass ``()`` for the pure assignment.
+
+    Two join strategies (see the module docstring):
+
+    - **Shuffle**, when ``salt > 0`` or the layer's size estimate (one
+      skinny agg job) exceeds ``max_prep_bytes``: a sort-merge join on
+      ``(cell[, salt])`` and a ``min(struct)`` winner aggregate that
+      reuses the join's partitioning.  No Python stage.
+    - **Broadcast**, otherwise.  The layer is collected once (memoized
+      on the ``polygons`` DataFrame: build the dim index once, stream
+      images against it forever) into a broadcast ``(cell, pid,
+      ring)`` index and a ``(pid, trs, qq)`` dim.  Two tiers, picked
+      from verified properties of the collected layer:
+
+      1. **Pairwise-disjoint bboxes** (a tiling, e.g. PLSS aliquot
+         tiles): every image matches at most one polygon, so the
+         winner reduction is the identity and the whole assignment is
+         JVM-native -- no Python stage, hence none of the
+         worker-socket bandwidth ceiling the 96M probes measured
+         (BENCH.md).
+      2. **Overlapping polygons**: a ``mapInArrow`` kernel reduces
+         min-pid per image over the surviving candidate rows.  The
+         crossing carries an int32 ``pid`` plus the requested payload
+         (the ray cast already ran natively), and the winner's
+         ``(trs, qq)`` attach JVM-side via a broadcast join against
+         the dim.
+    """
+    payload_cols = tuple(payload_cols)
+    dt = dict(points.dtypes)
+    # x/y always feed the ray cast but only reach the output when the
+    # caller asked for them.
+    extra_xy = [c for c in ('x', 'y') if c not in payload_cols]
+    pts = points.select('image_id', *payload_cols, *extra_xy,
+                        F.col(f'cell{res}').alias('cell'))
+    key_schema = [f"image_id {dt['image_id']}"] \
+        + [f'{c} {dt[c]}' for c in payload_cols]
+
+    memo = getattr(polygons, '_fused_prep', None)
+    if memo is None:
+        memo = polygons._fused_prep = {}
+    n_poly, est_bytes, max_m = _layer_stats(polygons, memo)
+    if not n_poly:
+        return points.sparkSession.createDataFrame(
+            [], ', '.join(key_schema + ['trs string', 'qq string']))
+    if salt > 0 or est_bytes > max_prep_bytes:
+        return _shuffle_assign(pts, polygons, res, salt, max_m,
+                               payload_cols)
+
+    prep = memo.get(res)
+    if prep is None:
+        prep = memo[res] = _broadcast_prep(polygons, res)
+    max_m, disjoint, index, dim = prep
+    cand = pts.join(F.broadcast(index), 'cell') \
+        .filter(_ray_cast_expr(max_m, F.col('x'), F.col('y'))) \
+        .select('image_id', *payload_cols, 'pid')
+    if not disjoint:
+        cand = cand.mapInArrow(_min_pid_kernel(1 + len(payload_cols)),
+                               schema=', '.join(key_schema + ['pid int']))
+    return cand.join(F.broadcast(dim), 'pid') \
+        .select('image_id', *payload_cols, 'trs', 'qq')
 
 
 def cell_histogram(points: DataFrame, res: int = JOIN_RES) -> DataFrame:

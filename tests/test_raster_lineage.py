@@ -16,6 +16,7 @@ from pytrs_spark.pipeline import (
     run_raster,
 )
 from pytrs_spark.raster import regrid_images
+from spatial_oracle import bruteforce_tiles, python_nodes
 
 
 @pytest.fixture(scope='module')
@@ -68,28 +69,6 @@ def _tile_rows(df):
                   for r in df.collect())
 
 
-def _python_nodes(df):
-    """Class names of the Python-running nodes in ``df``'s final
-    executed plan (AQE query stages unwrapped; a cached relation is a
-    leaf, so its own lineage is not counted)."""
-    root = df._jdf.queryExecution().executedPlan()
-    names, stack = set(), [root]
-    while stack:
-        node = stack.pop()
-        name = node.getClass().getSimpleName()
-        if name == 'AdaptiveSparkPlanExec':
-            stack.append(node.finalPhysicalPlan())
-            continue
-        if name.endswith('QueryStageExec'):
-            stack.append(node.plan())
-            continue
-        if 'Python' in name or 'Pandas' in name or 'Arrow' in name:
-            names.add(name)
-        stack.extend(node.children().apply(i)
-                     for i in range(node.children().length()))
-    return names
-
-
 def test_run_raster_holds_one_python_stage(spark, polygons, tmp_path):
     """Raster assigns through the fused path: no ArrowEvalPython ray
     cast and no mapInPandas reduction, only the per-tile composite.
@@ -101,18 +80,18 @@ def test_run_raster_holds_one_python_stage(spark, polygons, tmp_path):
     tiles = run_raster(spark.read.parquet(path), polygons,
                        tile_px=32, patch_px=8)
     assert sum(r[2] for r in _tile_rows(tiles)) == 200
-    assert _python_nodes(tiles) == {'FlatMapGroupsInPandasExec'}
+    assert python_nodes(tiles) == {'FlatMapGroupsInPandasExec'}
 
 
-def test_run_raster_matches_unfused_on_overlapping_layer(spark, polygons):
+def test_run_raster_matches_bruteforce_on_overlapping_layer(spark,
+                                                            polygons):
     """On an overlapping layer (a whole-section 'ALL' box over its 16
     QQs: the fused path's kernel-reduction tier), run_raster's tiles
-    equal materialize_tiles over the unfused reference composition,
-    box and tie-break included ('ALL' < 'NENE' wins every image in the
-    section)."""
+    equal materialize_tiles over the brute-force ray-cast assignment
+    plus each winner's box, tie-break included ('ALL' < 'NENE' wins
+    every image in the section)."""
     from pytrs_spark.raster import materialize_tiles
     from pytrs_spark.spatial.grid import with_anchor
-    from pytrs_spark.spatial.join import assign_tiles_local, spatial_join
     some = (f"{datagen.DENSE_TWP}n{datagen.DENSE_RGE}w"
             f"{datagen.DENSE_SEC}")
     extra = polygons.filter(F.col('trs') == some).groupBy('trs').agg(
@@ -127,8 +106,13 @@ def test_run_raster_matches_unfused_on_overlapping_layer(spark, polygons):
     images = datagen.gen_images(spark, 300, with_bytes=True, partitions=4)
     got = _tile_rows(run_raster(images, overlapping,
                                 tile_px=32, patch_px=8))
-    ref = assign_tiles_local(spatial_join(with_anchor(images),
-                                          overlapping))
+    truth = spark.createDataFrame(
+        sorted(bruteforce_tiles(images, overlapping)),
+        'image_id string, trs string, qq string')
+    ref = truth.join(with_anchor(images).select('image_id', 'x', 'y'),
+                     'image_id') \
+        .join(overlapping.select('trs', 'qq', 'xmin', 'ymin',
+                                 'xmax', 'ymax'), ['trs', 'qq'])
     want = _tile_rows(materialize_tiles(ref, images,
                                         tile_px=32, patch_px=8))
     assert got == want

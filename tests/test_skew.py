@@ -1,6 +1,7 @@
-"""G9 skew handling: the salted shuffle-join path must equal the
-broadcast path row-for-row on a heavily skewed point distribution
-(half of all images aimed at one section of the dense township)."""
+"""G9 skew handling: the salted shuffle strategy must equal the
+broadcast strategy row-for-row on a heavily skewed point distribution
+(half of all images aimed at one section of the dense township), and
+must really run a salted shuffle join."""
 
 from pyspark.sql import functions as F
 
@@ -11,11 +12,12 @@ from pytrs_spark.pipeline import (
 )
 from pytrs_spark.spatial.join import cell_histogram, pick_salt_factor
 from pytrs_spark.spatial.grid import with_anchor
+from spatial_oracle import assert_shuffle_strategy
 
 
 def test_salted_equals_broadcast_under_skew(spark):
     images = datagen.gen_images(spark, 2000, skew_fraction=0.5,
-                                with_bytes=False, partitions=8)
+                                with_bytes=False, partitions=8).cache()
     polygons = polygon_layer_from_descs(datagen.gen_descs(spark)).cache()
     polygons.count()
 
@@ -26,6 +28,9 @@ def test_salted_equals_broadcast_under_skew(spark):
     assert base.count() == 2000
     assert base.exceptAll(salted).isEmpty()
     assert salted.exceptAll(base).isEmpty()
+    # The hot cell spreads over the salt: a sort-merge join on
+    # (cell, salt), not the broadcast join.
+    assert_shuffle_strategy(salted, ('cell', 'salt'))
 
     # The skew slice is measurable and every caption's embedded
     # ground-truth tile matches the join's verdict.  The dense section

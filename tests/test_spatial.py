@@ -10,6 +10,11 @@ from pytrs_spark.pipeline import (
     assign_images_to_tiles,
     polygon_layer_from_descs,
 )
+from spatial_oracle import (
+    assert_shuffle_strategy,
+    bruteforce_tiles,
+    python_nodes,
+)
 
 N_IMAGES = 2000
 
@@ -84,15 +89,15 @@ def test_tile_assignment_matches_bruteforce(spark, polygons, images):
 
 
 def test_salted_join_same_result(spark, polygons, images):
-    """The salted shuffle-join path must produce the identical
-    assignment set as the broadcast path."""
+    """The salted shuffle strategy must produce the identical rows as
+    the broadcast strategy, through a real salted sort-merge join: one
+    ``hashpartitioning(cell, salt)`` exchange per side, the winner
+    aggregate on the join's partitioning, no Python stage."""
     base = assign_images_to_tiles(images, polygons, salt=0)
     salted = assign_images_to_tiles(images, polygons, salt=4)
-    a = {tuple(r) for r in
-         base.select('image_id', 'trs', 'qq').collect()}
-    b = {tuple(r) for r in
-         salted.select('image_id', 'trs', 'qq').collect()}
-    assert a == b
+    assert {tuple(r) for r in base.collect()} \
+        == {tuple(r) for r in salted.collect()}
+    assert_shuffle_strategy(salted, ('cell', 'salt'))
 
 
 def _assignment_set(df):
@@ -104,49 +109,16 @@ def _plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_fused_tier1_disjoint_layer_is_all_native(spark, polygons,
-                                                  images, tmp_path):
-    """The descs-corpus QQ lattice is a verified-disjoint uniform-
-    arity tiling, so the fused assignment must take the zero-Python
-    tier: no MapInArrow/Arrow-eval stage anywhere in the plan, and
-    output identical to the unfused kernel composition.
-
-    Images are read back from parquet so the plan under test is the
-    production shape (the in-memory test generator is itself a
-    MapInPandas stage and would trip the no-Python assertion)."""
-    from pytrs_spark.spatial.join import (
-        assign_tiles_local,
-        spatial_join,
-    )
-    from pytrs_spark.spatial.grid import with_anchor
-    path = str(tmp_path / 'imgs')
-    images.write.mode('overwrite').parquet(path)
-    images = spark.read.parquet(path)
-    fused = assign_images_to_tiles(images, polygons, payload_cols=())
-    plan = _plan(fused)
-    assert 'MapInArrow' not in plan and 'MapInPandas' not in plan \
-        and 'ArrowEvalPython' not in plan, plan
-    unfused = assign_tiles_local(
-        spatial_join(with_anchor(images), polygons))
-    assert _assignment_set(fused) == _assignment_set(unfused)
+@pytest.fixture(scope="module")
+def lattice_truth(polygons, images):
+    return bruteforce_tiles(images, polygons)
 
 
-def test_fused_tier2_overlapping_layer_reduces_in_kernel(
-        spark, polygons, images):
-    """Adding a whole-section 'ALL' box on top of its 16 QQs makes the
-    layer overlap: the fused path must fall back to the kernel winner
-    reduction (tier 2) and still match the unfused composition --
-    including the lexicographic-min tie-break ('ALL' < 'NENE', so the
-    section box wins every point inside it)."""
+def _with_section_box(polygons):
+    """The layer plus a whole-section 'ALL' box over the dense
+    section's 16 QQs (an overlapping layer).  The dense skew section
+    is guaranteed ~10% of the images, so the box wins rows."""
     from pyspark.sql import functions as F
-
-    from pytrs_spark.spatial.grid import with_anchor
-    from pytrs_spark.spatial.join import (
-        assign_tiles_local,
-        spatial_join,
-    )
-    # The dense skew section is guaranteed ~10% of the images, so the
-    # ALL-wins assertion below has rows to check.
     some = (f"{datagen.DENSE_TWP}n{datagen.DENSE_RGE}w"
             f"{datagen.DENSE_SEC}")
     extra = polygons.filter(F.col('trs') == some).groupBy('trs').agg(
@@ -157,25 +129,68 @@ def test_fused_tier2_overlapping_layer_reduces_in_kernel(
         'trs', 'qq', 'depth', 'xmin', 'ymin', 'xmax', 'ymax',
         F.array('xmin', 'xmax', 'xmax', 'xmin').alias('ring_xs'),
         F.array('ymin', 'ymin', 'ymax', 'ymax').alias('ring_ys'))
-    overlapping = polygons.unionByName(extra)
+    return some, polygons.unionByName(extra).cache()
+
+
+def test_fused_tier1_disjoint_layer_is_all_native(spark, polygons,
+                                                  images, lattice_truth,
+                                                  tmp_path):
+    """The descs-corpus QQ lattice is a verified-disjoint tiling, so
+    the broadcast strategy must take the zero-Python tier: no
+    MapInArrow/Arrow-eval stage anywhere in the plan, and output
+    identical to the brute-force ray cast.
+
+    Images are read back from parquet so the plan under test is the
+    production shape (the in-memory test generator is itself a
+    MapInPandas stage and would trip the no-Python assertion)."""
+    path = str(tmp_path / 'imgs')
+    images.write.mode('overwrite').parquet(path)
+    images = spark.read.parquet(path)
+    fused = assign_images_to_tiles(images, polygons, payload_cols=())
+    plan = _plan(fused)
+    assert 'MapInArrow' not in plan and 'MapInPandas' not in plan \
+        and 'ArrowEvalPython' not in plan, plan
+    assert _assignment_set(fused) == lattice_truth
+
+
+def test_fused_tier2_overlapping_layer_reduces_in_kernel(
+        spark, polygons, images):
+    """Adding a whole-section 'ALL' box on top of its 16 QQs makes the
+    layer overlap: the broadcast strategy must fall back to the kernel
+    winner reduction (tier 2) and still match the brute-force ray
+    cast -- including the lexicographic-min tie-break ('ALL' < 'NENE',
+    so the section box wins every point inside it)."""
+    some, overlapping = _with_section_box(polygons)
     fused = assign_images_to_tiles(images, overlapping,
                                    payload_cols=())
-    assert 'MapInArrow' in _plan(fused)
-    unfused = assign_tiles_local(
-        spatial_join(with_anchor(images), overlapping))
     got = _assignment_set(fused)
-    assert got == _assignment_set(unfused)
+    assert python_nodes(fused) == {'MapInArrowExec'}
+    assert got == bruteforce_tiles(images, overlapping)
     # Every image inside `some` must be assigned its ALL box.
     in_sec = {(i, t, q) for (i, t, q) in got if t == some}
     assert in_sec and all(q == 'ALL' for (_, _, q) in in_sec)
 
 
-def test_fused_tier3_variable_arity_uses_kernel_pip(spark, polygons,
-                                                    images):
+def test_shuffle_strategy_on_overlapping_layer(spark, polygons, images):
+    """The salted shuffle strategy's ``min(struct(trs, qq, ...))``
+    aggregate applies the same tie-break natively: equal to the
+    broadcast kernel tier, rows and payload included."""
+    _, overlapping = _with_section_box(polygons)
+    salted = assign_images_to_tiles(images, overlapping, salt=4)
+    base = assign_images_to_tiles(images, overlapping)
+    assert {tuple(r) for r in salted.collect()} \
+        == {tuple(r) for r in base.collect()}
+    assert_shuffle_strategy(salted, ('cell', 'salt'))
+
+
+def test_fused_variable_arity_layer_is_all_native(spark, polygons,
+                                                  images):
     """Splitting one box's top edge with a collinear midpoint vertex
-    (same geometry, 5-vertex ring) breaks arity uniformity: the fused
-    path must run the general Arrow PIP kernel and the assignment must
-    be unchanged (the extra vertex is geometrically a no-op)."""
+    (same geometry, 5-vertex ring) mixes ring arities: the padded
+    native ray cast must handle it with no Python stage (the layer is
+    still bbox-disjoint), and the assignment must equal the brute-
+    force ray cast over the mixed rings and be unchanged (the extra
+    vertex is geometrically a no-op) on both strategies."""
     from pyspark.sql import functions as F
     base = assign_images_to_tiles(images, polygons, payload_cols=())
     first = polygons.orderBy('trs', 'qq').limit(1) \
@@ -185,10 +200,16 @@ def test_fused_tier3_variable_arity_uses_kernel_pip(spark, polygons,
         .withColumn('ring_ys', F.array(
             'ymin', 'ymin', 'ymax', 'ymax', 'ymax'))
     rest = polygons.exceptAll(polygons.orderBy('trs', 'qq').limit(1))
-    mixed = rest.unionByName(first)
+    mixed = rest.unionByName(first).cache()
     fused = assign_images_to_tiles(images, mixed, payload_cols=())
-    assert 'MapInArrow' in _plan(fused)
-    assert _assignment_set(fused) == _assignment_set(base)
+    got = _assignment_set(fused)
+    assert not python_nodes(fused)
+    assert got == bruteforce_tiles(images, mixed)
+    assert got == _assignment_set(base)
+    # The shuffle strategy pads the same rings natively.
+    salted = assign_images_to_tiles(images, mixed, payload_cols=(),
+                                    salt=4)
+    assert _assignment_set(salted) == got
 
 
 def test_bbox_disjoint_sweep():
@@ -216,34 +237,60 @@ def test_skew_slice_lands_in_dense_section(spark, images, polygons):
     assert dense >= int(N_IMAGES * datagen.SKEW_FRACTION_DEFAULT)
 
 
-def test_fused_prep_over_cap_falls_back_to_shuffle(spark, polygons,
-                                                   images):
+def test_fused_prep_over_cap_falls_back_to_shuffle(spark, images,
+                                                   lattice_truth,
+                                                   monkeypatch):
     """A polygon layer whose size estimate exceeds the prep cap must
-    NEVER be collected to the driver: the fused path estimates
-    rows x ring-bytes with one skinny agg, then hands off to the
-    shuffle-join + streaming winner reduction -- with assignments
-    identical to the broadcast-index path."""
+    NEVER be collected to the driver: the size comes from one skinny
+    agg, then the shuffle strategy runs -- a sort-merge join on
+    ``cell`` and a native winner aggregate, no Python stage -- with
+    the brute-force assignment."""
     from pytrs_spark.spatial.grid import with_anchor
-    from pytrs_spark.spatial.join import assign_tiles_fused
-
-    baseline = {tuple(r) for r in
-                assign_images_to_tiles(images, polygons,
-                                       payload_cols=())
-                .select('image_id', 'trs', 'qq').collect()}
+    from pytrs_spark.spatial.join import JOIN_RES, assign_tiles_fused
 
     # Fresh layer object: the prep memo sticks to the DataFrame, so
-    # the capped decision must not poison the shared fixture.
-    fresh = polygon_layer_from_descs(datagen.gen_descs(spark))
-    points = with_anchor(images)
-    out = assign_tiles_fused(points, fresh, payload_cols=(),
-                             max_prep_bytes=1)
-    got = {tuple(r) for r in
-           out.select('image_id', 'trs', 'qq').collect()}
-    assert got == baseline
-    # The guard must have refused the driver collect: the memo holds
-    # the shuffle marker, never the collected-prep tuple.
-    from pytrs_spark.spatial.join import JOIN_RES
-    assert fresh._fused_prep[JOIN_RES] == '_shuffle'
+    # the capped decision must not touch the shared fixture.
+    fresh = polygon_layer_from_descs(datagen.gen_descs(spark)).cache()
+
+    def collect_layer(self):
+        raise AssertionError('the over-cap layer was collected')
+
+    with monkeypatch.context() as m:
+        m.setattr(type(fresh), 'toPandas', collect_layer)
+        out = assign_tiles_fused(with_anchor(images), fresh,
+                                 payload_cols=(), max_prep_bytes=1)
+        assert _assignment_set(out) == lattice_truth
+    assert_shuffle_strategy(out, ('cell',))
+    # The memo holds the size estimate only, never a collected prep.
+    assert set(fresh._fused_prep) == {'stats'}
+    assert JOIN_RES not in fresh._fused_prep
+
+
+@pytest.mark.parametrize('salt', [0, 4])
+def test_empty_layer_returns_typed_empty_frame(spark, polygons, images,
+                                               salt):
+    empty = polygons.filter('false')
+    out = assign_images_to_tiles(images, empty, salt=salt)
+    assert out.columns == ['image_id', 'caption', 'x', 'y', 'trs', 'qq']
+    assert dict(out.dtypes)['trs'] == 'string'
+    assert out.count() == 0
+
+
+@pytest.mark.parametrize('salt', [0, 4])
+def test_image_outside_every_polygon_gets_no_row(spark, polygons, images,
+                                                 lattice_truth, salt):
+    """Dropping the dense section's 16 QQs from the layer leaves its
+    ~10% of images outside every polygon: they get no row, everyone
+    else keeps their tile."""
+    from pyspark.sql import functions as F
+    some = (f"{datagen.DENSE_TWP}n{datagen.DENSE_RGE}w"
+            f"{datagen.DENSE_SEC}")
+    holed = polygons.filter(F.col('trs') != some).cache()
+    out = assign_images_to_tiles(images, holed, payload_cols=(),
+                                 salt=salt)
+    want = {r for r in lattice_truth if r[1] != some}
+    assert len(want) <= N_IMAGES * (1 - datagen.SKEW_FRACTION_DEFAULT)
+    assert _assignment_set(out) == want
 
 
 def test_knn_large_k_grows_radius_instead_of_crashing(spark):
