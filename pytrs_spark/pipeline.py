@@ -7,14 +7,13 @@ assign each image to its (trs, qq) aliquot tile.
     images ──with_anchor (no bytes!)──▶ points
     points ⋈ poly cell index ──native ray cast──▶ matches ──▶ tiles
 
-Every assignment runs :func:`~.spatial.join.assign_tiles_fused`: a
-broadcast index by default, a (salted) sort-merge join when ``salt >
-0`` or the layer is too big to collect.  ``bytes`` never enters the
-join path (late projection); the raster stage re-joins it by
-image_id.  Raster tiles assign through the same function as the
-flagship (:func:`run_raster`), so both hold at most one Python stage
-per task: the ``mapInArrow`` min-pid kernel where a broadcast layer
-overlaps, none where it is a tiling or on the shuffle strategy.
+Every assignment runs :func:`~.spatial.join.assign_tiles_fused`: one
+native cell index and one native winner, with a broadcast hint by
+default and a (salted) sort-merge hint when ``salt > 0`` or the index
+is too big to collect.  ``bytes`` never enters the join path (late
+projection); the raster stage re-joins it by image_id.  Raster tiles
+assign through the same function as the flagship (:func:`run_raster`),
+so tile assignment has no Python stage on any layer or strategy.
 """
 
 from pyspark.sql import DataFrame
@@ -48,9 +47,9 @@ def assign_images_to_tiles(images: DataFrame, polygons: DataFrame,
     the default payload keeps the caption and anchor x/y, i.e. the
     full historical output).  Pass ``payload_cols=()`` for the pure
     assignment (image_id, trs, qq) -- at 10^11-row scale payload
-    bytes through the joins, exchanges and (on an overlapping
-    broadcast layer) the Python crossing are the bottleneck (x/y
-    still feed the ray cast; they just don't reach the output), and
+    bytes through the joins, exchanges and (on an overlapping layer)
+    the winner aggregate are the bottleneck (x/y still feed the ray
+    cast; they just don't reach the output), and
     the late-materialization policy (re-join payload by image_id only
     where needed) is the same one that keeps ``bytes`` out of the
     join path.
@@ -84,8 +83,8 @@ def run_raster(images: DataFrame, polygons: DataFrame,
     (trs, qq) aliquot.
 
     Raster shares the flagship's fused assignment
-    (:func:`assign_tile_boxes`), so it holds at most one Python worker
-    per task slot."""
+    (:func:`assign_tile_boxes`), which has no Python stage, so the
+    per-tile composite is its one Python stage."""
     from .raster import materialize_tiles
     return materialize_tiles(assign_tile_boxes(images, polygons), images,
                              tile_px=tile_px, patch_px=patch_px)

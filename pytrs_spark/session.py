@@ -6,6 +6,7 @@ real cluster (AQE on, Arrow on, shuffle partitions sized to cores).
 """
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -39,6 +40,17 @@ def default_cores() -> int:
     return os.cpu_count() or 1
 
 
+def _mem_total_mb(meminfo):
+    """The host's ``MemTotal`` in MB, or None without a readable
+    ``meminfo``."""
+    try:
+        with open(meminfo) as f:
+            return next(int(line.split()[1]) for line in f
+                        if line.startswith("MemTotal:")) // 1024
+    except (OSError, StopIteration):
+        return None
+
+
 def default_driver_memory(meminfo="/proc/meminfo") -> str:
     """``SPARK_GRAFT_DRIVER_MEM``, else half of the host's ``MemTotal``
     clamped to 1-48 GB (48 GB without a readable ``meminfo``).  Under
@@ -48,13 +60,31 @@ def default_driver_memory(meminfo="/proc/meminfo") -> str:
     if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
         return os.environ["SPARK_GRAFT_DRIVER_MEM"]
     cap_mb = 48 * 1024
-    try:
-        with open(meminfo) as f:
-            kb = next(int(line.split()[1]) for line in f
-                      if line.startswith("MemTotal:"))
-    except (OSError, StopIteration):
+    total_mb = _mem_total_mb(meminfo)
+    if total_mb is None:
         return f"{cap_mb}m"
-    return f"{max(1024, min(cap_mb, kb // 2048))}m"
+    return f"{max(1024, min(cap_mb, total_mb // 2))}m"
+
+
+def default_executor_memory(master, meminfo="/proc/meminfo") -> str | None:
+    """``SPARK_GRAFT_EXECUTOR_MEM``, else, for a
+    ``local-cluster[N,C,MB]`` master, half of the host's ``MemTotal``
+    split over its N executors: the same half the single ``local[N]``
+    JVM gets (:func:`default_driver_memory`), at least 1 GB each and
+    at most the worker's MB (an executor asking for more than its
+    worker offers never launches; the worker's MB without a readable
+    ``meminfo``).  None for other masters: Spark's default applies."""
+    if os.environ.get("SPARK_GRAFT_EXECUTOR_MEM"):
+        return os.environ["SPARK_GRAFT_EXECUTOR_MEM"]
+    m = re.fullmatch(r"local-cluster\[\s*(\d+)\s*,\s*\d+\s*,\s*(\d+)\s*\]",
+                     master)
+    if not m:
+        return None
+    n, worker_mb = int(m.group(1)), int(m.group(2))
+    total_mb = _mem_total_mb(meminfo)
+    if total_mb is None:
+        return f"{worker_mb}m"
+    return f"{min(worker_mb, max(1024, total_mb // 2 // n))}m"
 
 
 def get_spark(app_name="pytrs_spark", cores=None, shuffle_partitions=None,
@@ -69,8 +99,9 @@ def get_spark(app_name="pytrs_spark", cores=None, shuffle_partitions=None,
     ``cores`` still sizes shuffle partitions in that case (pass total
     cores across executors).
 
-    ``cores`` and the driver heap default to the host's
-    (:func:`default_cores`, :func:`default_driver_memory`).
+    ``cores`` and the driver and executor heaps default to the host's
+    (:func:`default_cores`, :func:`default_driver_memory`,
+    :func:`default_executor_memory`).
     """
     if cores is None:
         cores = default_cores()
@@ -130,10 +161,9 @@ def get_spark(app_name="pytrs_spark", cores=None, shuffle_partitions=None,
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_",
                 os.environ["MALLOC_TRIM_THRESHOLD_"])
     )
-    if master.startswith("local-cluster"):
-        builder = builder.config(
-            "spark.executor.memory",
-            os.environ.get("SPARK_GRAFT_EXECUTOR_MEM", "6g"))
+    executor_memory = default_executor_memory(master)
+    if executor_memory:
+        builder = builder.config("spark.executor.memory", executor_memory)
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

@@ -10,13 +10,17 @@ from pytrs_spark.pipeline import (
     assign_images_to_tiles,
     polygon_layer_from_descs,
 )
+from pytrs_spark.spatial.join import JOIN_RES
 from spatial_oracle import (
     assert_shuffle_strategy,
     bruteforce_tiles,
+    final_plan_nodes,
     python_nodes,
 )
 
 N_IMAGES = 2000
+# The section that ~10% of the generated images are aimed at.
+DENSE = f"{datagen.DENSE_TWP}n{datagen.DENSE_RGE}w{datagen.DENSE_SEC}"
 
 
 @pytest.fixture(scope="module")
@@ -91,8 +95,8 @@ def test_tile_assignment_matches_bruteforce(spark, polygons, images):
 def test_salted_join_same_result(spark, polygons, images):
     """The salted shuffle strategy must produce the identical rows as
     the broadcast strategy, through a real salted sort-merge join: one
-    ``hashpartitioning(cell, salt)`` exchange per side, the winner
-    aggregate on the join's partitioning, no Python stage."""
+    ``hashpartitioning(cell, salt)`` exchange per side, no other
+    exchange, no Python stage."""
     base = assign_images_to_tiles(images, polygons, salt=0)
     salted = assign_images_to_tiles(images, polygons, salt=4)
     assert {tuple(r) for r in base.collect()} \
@@ -105,10 +109,6 @@ def _assignment_set(df):
             df.select('image_id', 'trs', 'qq').collect()}
 
 
-def _plan(df):
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 @pytest.fixture(scope="module")
 def lattice_truth(polygons, images):
     return bruteforce_tiles(images, polygons)
@@ -119,9 +119,7 @@ def _with_section_box(polygons):
     section's 16 QQs (an overlapping layer).  The dense skew section
     is guaranteed ~10% of the images, so the box wins rows."""
     from pyspark.sql import functions as F
-    some = (f"{datagen.DENSE_TWP}n{datagen.DENSE_RGE}w"
-            f"{datagen.DENSE_SEC}")
-    extra = polygons.filter(F.col('trs') == some).groupBy('trs').agg(
+    extra = polygons.filter(F.col('trs') == DENSE).groupBy('trs').agg(
         F.lit('ALL').alias('qq'), F.lit(0).alias('depth'),
         F.min('xmin').alias('xmin'), F.min('ymin').alias('ymin'),
         F.max('xmax').alias('xmax'), F.max('ymax').alias('ymax'))
@@ -129,16 +127,59 @@ def _with_section_box(polygons):
         'trs', 'qq', 'depth', 'xmin', 'ymin', 'xmax', 'ymax',
         F.array('xmin', 'xmax', 'xmax', 'xmin').alias('ring_xs'),
         F.array('ymin', 'ymin', 'ymax', 'ymax').alias('ring_ys'))
-    return some, polygons.unionByName(extra).cache()
+    return polygons.unionByName(extra).cache()
+
+
+def _quarters(xmin, ymin, xmax, ymax):
+    """The four quarter boxes of a box, by PLSS direction."""
+    xm, ym = (xmin + xmax) / 2, (ymin + ymax) / 2
+    return {'NE': (xm, ym, xmax, ymax), 'NW': (xmin, ym, xm, ymax),
+            'SE': (xm, ymin, xmax, ym), 'SW': (xmin, ymin, xm, ym)}
+
+
+def _with_boxes(polygons, trs, boxes, drop=()):
+    """The layer minus the ``drop`` QQs of section ``trs``, plus one
+    box polygon per ``{qq: (xmin, ymin, xmax, ymax)}`` entry."""
+    from pyspark.sql import functions as F
+    rows = [(trs, qq, len(qq) // 2, x0, y0, x1, y1,
+             [x0, x1, x1, x0], [y0, y0, y1, y1])
+            for qq, (x0, y0, x1, y1) in sorted(boxes.items())]
+    extra = polygons.sparkSession.createDataFrame(rows, polygons.schema)
+    kept = polygons.filter(~((F.col('trs') == trs)
+                             & F.col('qq').isin(list(drop))))
+    return kept.unionByName(extra).cache()
+
+
+def _with_nested_aliquots(polygons):
+    """The dense section's SWSW QQ plus its four depth-3 aliquots and
+    one depth-4 aliquot inside NESWSW: six polygons in one cell.  Three
+    of the four children sort before 'SWSW' ('NESWSW' < 'SWSW'), so
+    the tie-break is exercised both ways."""
+    qq = polygons.filter((polygons.trs == DENSE) & (polygons.qq == 'SWSW')) \
+        .select('xmin', 'ymin', 'xmax', 'ymax').first()
+    kids = {d + 'SWSW': box for d, box in _quarters(*qq).items()}
+    kids['NENESWSW'] = _quarters(*kids['NESWSW'])['NE']
+    return _with_boxes(polygons, DENSE, kids)
+
+
+def _with_split_cell(polygons):
+    """The dense section's NENE QQ replaced by its N and S halves: a
+    bbox-disjoint tiling whose halves share one join cell (K = 2)."""
+    qq = polygons.filter((polygons.trs == DENSE) & (polygons.qq == 'NENE')) \
+        .select('xmin', 'ymin', 'xmax', 'ymax').first()
+    ym = (qq['ymin'] + qq['ymax']) / 2
+    halves = {'N2NENE': (qq['xmin'], ym, qq['xmax'], qq['ymax']),
+              'S2NENE': (qq['xmin'], qq['ymin'], qq['xmax'], ym)}
+    return _with_boxes(polygons, DENSE, halves, drop=('NENE',))
 
 
 def test_fused_tier1_disjoint_layer_is_all_native(spark, polygons,
                                                   images, lattice_truth,
                                                   tmp_path):
-    """The descs-corpus QQ lattice is a verified-disjoint tiling, so
-    the broadcast strategy must take the zero-Python tier: no
-    MapInArrow/Arrow-eval stage anywhere in the plan, and output
-    identical to the brute-force ray cast.
+    """No cell of the descs-corpus QQ lattice holds two polygons
+    (K == 1), so the broadcast strategy skips the winner aggregate:
+    no Python node and no exchange anywhere in the final plan, and
+    output identical to the brute-force ray cast.
 
     Images are read back from parquet so the plan under test is the
     production shape (the in-memory test generator is itself a
@@ -147,35 +188,47 @@ def test_fused_tier1_disjoint_layer_is_all_native(spark, polygons,
     images.write.mode('overwrite').parquet(path)
     images = spark.read.parquet(path)
     fused = assign_images_to_tiles(images, polygons, payload_cols=())
-    plan = _plan(fused)
-    assert 'MapInArrow' not in plan and 'MapInPandas' not in plan \
-        and 'ArrowEvalPython' not in plan, plan
     assert _assignment_set(fused) == lattice_truth
+    names = [name for name, _ in final_plan_nodes(fused)]
+    assert not python_nodes(fused), names
+    assert 'BroadcastHashJoinExec' in names, names
+    assert 'ShuffleExchangeExec' not in names, names
 
 
-def test_fused_tier2_overlapping_layer_reduces_in_kernel(
-        spark, polygons, images):
-    """Adding a whole-section 'ALL' box on top of its 16 QQs makes the
-    layer overlap: the broadcast strategy must fall back to the kernel
-    winner reduction (tier 2) and still match the brute-force ray
-    cast -- including the lexicographic-min tie-break ('ALL' < 'NENE',
-    so the section box wins every point inside it)."""
-    some, overlapping = _with_section_box(polygons)
-    fused = assign_images_to_tiles(images, overlapping,
-                                   payload_cols=())
-    got = _assignment_set(fused)
-    assert python_nodes(fused) == {'MapInArrowExec'}
-    assert got == bruteforce_tiles(images, overlapping)
-    # Every image inside `some` must be assigned its ALL box.
-    in_sec = {(i, t, q) for (i, t, q) in got if t == some}
-    assert in_sec and all(q == 'ALL' for (_, _, q) in in_sec)
+@pytest.mark.parametrize('layer, k, winners', [
+    (_with_section_box, 2, {'ALL'}),
+    (_with_nested_aliquots, 6, {'NENESWSW', 'NWSWSW', 'SESWSW', 'SWSW'}),
+    (_with_split_cell, 2, {'N2NENE', 'S2NENE'}),
+], ids=['section_box', 'nested_aliquots', 'split_cell'])
+def test_fused_overlapping_layer_reduces_natively(spark, polygons, images,
+                                                  layer, k, winners):
+    """Layers where some cell holds K > 1 polygons: a whole-section
+    'ALL' box on top of its 16 QQs, a QQ with deeper aliquots inside
+    it, and two disjoint half-QQs sharing a cell.  Both strategies
+    must reduce with the native winner aggregate (no Python node) and
+    match the brute-force ray cast, including the lexicographic-min
+    tie-break ('ALL' < 'NENE', so the section box wins every point
+    inside it)."""
+    layered = layer(polygons)
+    want = bruteforce_tiles(images, layered)
+    for salt in (0, 4):
+        fused = assign_images_to_tiles(images, layered, payload_cols=(),
+                                       salt=salt)
+        got = _assignment_set(fused)
+        assert not python_nodes(fused)
+        assert got == want, salt
+        if salt:
+            assert_shuffle_strategy(fused, ('cell', 'salt'))
+    assert layered._fused_prep['stats'][JOIN_RES][3] == k
+    # The images exercise each layer's tie-breaks.
+    assert winners <= {q for (_, t, q) in want if t == DENSE}
 
 
 def test_shuffle_strategy_on_overlapping_layer(spark, polygons, images):
     """The salted shuffle strategy's ``min(struct(trs, qq, ...))``
-    aggregate applies the same tie-break natively: equal to the
-    broadcast kernel tier, rows and payload included."""
-    _, overlapping = _with_section_box(polygons)
+    aggregate applies the same tie-break: equal to the broadcast
+    strategy, rows and payload included."""
+    overlapping = _with_section_box(polygons)
     salted = assign_images_to_tiles(images, overlapping, salt=4)
     base = assign_images_to_tiles(images, overlapping)
     assert {tuple(r) for r in salted.collect()} \
@@ -212,22 +265,6 @@ def test_fused_variable_arity_layer_is_all_native(spark, polygons,
     assert _assignment_set(salted) == got
 
 
-def test_bbox_disjoint_sweep():
-    """Half-open boxes sharing an edge are disjoint; interior overlap
-    is detected."""
-    from pytrs_spark.spatial.join import _bboxes_disjoint
-    xmin = np.array([0.0, 1.0, 0.0])
-    ymin = np.array([0.0, 0.0, 1.0])
-    xmax = np.array([1.0, 2.0, 1.0])
-    ymax = np.array([1.0, 1.0, 2.0])
-    assert _bboxes_disjoint(xmin, ymin, xmax, ymax)
-    xmin2 = np.append(xmin, 0.5)
-    ymin2 = np.append(ymin, 0.5)
-    xmax2 = np.append(xmax, 1.5)
-    ymax2 = np.append(ymax, 1.5)
-    assert not _bboxes_disjoint(xmin2, ymin2, xmax2, ymax2)
-
-
 def test_skew_slice_lands_in_dense_section(spark, images, polygons):
     """~10% of images are aimed at sec 14 of T154N-R97W."""
     result = assign_images_to_tiles(images, polygons)
@@ -257,6 +294,7 @@ def test_fused_prep_over_cap_falls_back_to_shuffle(spark, images,
 
     with monkeypatch.context() as m:
         m.setattr(type(fresh), 'toPandas', collect_layer)
+        m.setattr(type(fresh), 'toArrow', collect_layer)
         out = assign_tiles_fused(with_anchor(images), fresh,
                                  payload_cols=(), max_prep_bytes=1)
         assert _assignment_set(out) == lattice_truth
@@ -283,12 +321,10 @@ def test_image_outside_every_polygon_gets_no_row(spark, polygons, images,
     ~10% of images outside every polygon: they get no row, everyone
     else keeps their tile."""
     from pyspark.sql import functions as F
-    some = (f"{datagen.DENSE_TWP}n{datagen.DENSE_RGE}w"
-            f"{datagen.DENSE_SEC}")
-    holed = polygons.filter(F.col('trs') != some).cache()
+    holed = polygons.filter(F.col('trs') != DENSE).cache()
     out = assign_images_to_tiles(images, holed, payload_cols=(),
                                  salt=salt)
-    want = {r for r in lattice_truth if r[1] != some}
+    want = {r for r in lattice_truth if r[1] != DENSE}
     assert len(want) <= N_IMAGES * (1 - datagen.SKEW_FRACTION_DEFAULT)
     assert _assignment_set(out) == want
 
