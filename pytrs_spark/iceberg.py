@@ -55,16 +55,6 @@ def table_format(spark: SparkSession) -> str:
     return 'iceberg' if iceberg_available(spark) else 'parquet'
 
 
-def use_iceberg_everywhere(spark: SparkSession) -> str:
-    """Point the engine's format-agnostic table layer (lineage,
-    checkpointed outputs) at Iceberg when available.  Returns the
-    format chosen."""
-    from . import lineage
-    fmt = table_format(spark)
-    lineage.LINEAGE_FORMAT = fmt
-    return fmt
-
-
 def write_table(df: DataFrame, path: str, mode: str = 'overwrite',
                 partition_by=None) -> str:
     """Write ``df`` as an Iceberg table at ``path`` when the runtime is

@@ -1,5 +1,5 @@
 """Multimodal column operators: typed binary payloads + Arrow-batched
-decode / feature-extract / resize / frame-sample.
+decode / feature-extract / frame-sample.
 
 Images are real end-to-end against the deterministic SGI1 codec
 (:mod:`.imagecodec`); audio/video decode of real container formats is
@@ -47,13 +47,6 @@ def image_features(images: DataFrame) -> DataFrame:
 
     return images.select('image_id', 'bytes') \
         .mapInPandas(extract, schema=_FEATURE_SCHEMA)
-
-
-def resize_images(images: DataFrame, out_h: int, out_w: int) -> DataFrame:
-    """Decode -> resize -> re-encode (delegates to raster.regrid_images
-    which also reports the PSNR invariant)."""
-    from .raster import regrid_images
-    return regrid_images(images, out_h=out_h, out_w=out_w)
 
 
 # --- video (synthetic container; real codecs stubbed) -------------------

@@ -145,30 +145,16 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     return _rank_topk(scored, 'cos_sim', k)
 
 
-def _hyperplane(dim: int, plane_idx: int) -> list:
-    """Deterministic pseudo-random hyperplane components in [-1, 1]
-    (splitmix64-style finalizer on (plane, coord)).  Scalar spec kept
-    as the readable definition; :func:`_plane_matrix` is the
-    vectorized (bit-identical, unit-tested) production path."""
-    out = []
-    for j in range(dim):
-        z = (plane_idx * 1_000_003 + j + 1) * 0x9E3779B97F4A7C15
-        z &= (1 << 64) - 1
-        z ^= z >> 31
-        z = (z * 0xBF58476D1CE4E5B9) & ((1 << 64) - 1)
-        z ^= z >> 29
-        out.append((z % 2_000_001) / 1_000_000.0 - 1.0)
-    return out
-
-
 _PLANE_CACHE: dict = {}
 
 
 def _plane_matrix(dim: int, n_planes: int, offset: int = 0) -> np.ndarray:
     """(dim, n_planes) hyperplane matrix for planes offset..offset+n-1.
 
-    Vectorized uint64 splitmix (wrapping multiply == mod-2^64 of the
-    scalar spec) and memoized per worker process: at dim=768 x 64
+    Component j of plane p is a splitmix64-style finalizer of
+    ``(p * 1_000_003 + j + 1) * 0x9E3779B97F4A7C15`` mod 2^64, mapped
+    to [-1, 1].  Vectorized uint64 (wrapping multiply == mod 2^64) and
+    memoized per worker process: at dim=768 x 64
     planes the matrix is built once per executor lifetime, not once
     per Arrow batch (the Python double loop here used to run ~50k
     hash steps inside every UDF call)."""

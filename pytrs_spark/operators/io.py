@@ -140,7 +140,7 @@ def parse_plss_table(df: DataFrame, desc_col: str,
         t['lots'].alias('lots'),
         t['qqs'].alias('qqs'),
         t['lot_acres'].alias('lot_acres'),
-        # the writable attributes NICE_HEADERS advertises (and
+        # the reference's writable tract attributes (which
         # dedup_key('desc') consumes) must survive this path too
         t['aliquots_whole'].alias('aliquots_whole'),
         t['pp_desc'].alias('pp_desc'),
@@ -171,53 +171,6 @@ def read_plss_csv(spark: SparkSession, path: str, desc_col,
     return parse_plss_table(
         df, resolve(desc_col), config_col=resolve(config_col),
         layout_col=resolve(layout_col), config=config)
-
-
-# S4: "nice" header names for attribute projection
-# (Tract.ATTRIBUTES, tract.py:284-318; Tract.get_headers tract.py:1122-
-# 1167).
-NICE_HEADERS = {
-    'trs': 'Twp/Rge/Sec',
-    'twp': 'Township',
-    'twp_num': 'Twp Number',
-    'twp_ns': 'Twp Direction',
-    'rge': 'Range',
-    'rge_num': 'Rge Number',
-    'rge_ew': 'Rge Direction',
-    'twprge': 'Twp & Rge',
-    'sec': 'Section',
-    'sec_num': 'Section Number',
-    'qqs': 'QQs',
-    'aliquots': 'Aliquots (reconstructed from QQs)',
-    'aliquots_standard':
-        'Aliquots (reconstructed from QQs, assuming standard section)',
-    'aliquots_whole': 'Aliquots (as originally identified)',
-    'lots': 'Lots',
-    'ilots': 'Lot Numbers',
-    'lots_qqs': 'Lots & QQs',
-    'lots_aliquots': 'Lots & Aliquots (reconstructed from QQs)',
-    'lots_aliquots_standard':
-        'Lots & Aliquots (reconstructed from QQs, assuming standard '
-        'section)',
-    'desc': 'Description',
-    'orig_desc': 'Original (full) PLSS Description',
-    'pp_desc': 'Cleaned-Up Description',
-    'desc_is_flawed': 'Fatal Parsing Errors Identified',
-    'w_flags': 'Warning Flags',
-    'w_flag_lines': 'Warning Flags with Context',
-    'e_flags': 'Error Flags',
-    'e_flag_lines': 'Error Flags with Context',
-    'flags': 'Warning & Error Flags',
-    'flag_lines': 'Warning & Error Flags with Context',
-    'lot_acres': 'Lot Acreages',
-    'source': 'Source',
-}
-
-
-def with_nice_headers(df: DataFrame) -> DataFrame:
-    """Rename attribute columns to their "nice" display names (S4)."""
-    return df.withColumnsRenamed(
-        {c: NICE_HEADERS[c] for c in df.columns if c in NICE_HEADERS})
 
 
 def num_to_alpha_col(n) -> Column:

@@ -518,12 +518,6 @@ def pretty_twprge_col(twp_num, twp_ns, rge_num, rge_ew,
     return F.concat(F.lit(t), twp, ns, F.lit(delim), F.lit(r), rge, ew)
 
 
-def twprge_short_to_natural_col(twprge) -> Column:
-    """P11: '154n97w' -> 'T154N-R97W' (unpackers.py:529-540)."""
-    return F.regexp_replace(
-        F.concat(F.lit('T'), F.upper(twprge)), '(N|S)', '$1-R')
-
-
 def twprge_natural_to_short_col(twprge) -> Column:
     """P11: 'T154N-R97W' -> '154n97w' (unpackers.py:517-526)."""
     return F.regexp_replace(F.lower(twprge), '[rt-]', '')

@@ -162,21 +162,6 @@ def compile_sort_key(key: str = 'i,s,r,t', order_col: str = 'orig_index',
     return exprs
 
 
-def custom_sort(df: DataFrame, key: str = 'i,s,r,t', reverse=False,
-                order_col: str = 'orig_index') -> DataFrame:
-    """Sort by the DSL; ``reverse=True`` flips the final order
-    (containers.py:672-673: a full list reversal after the stable
-    sorts, so ties also flip -- emulated by appending the creation
-    order, descending, as the least-significant key)."""
-    exprs = compile_sort_key(key, order_col, reverse)
-    # creation order is always the least-significant key: the
-    # reference's stable multi-pass sorts preserve it for ties, and
-    # without it tied rows come back in shuffle-dependent order
-    exprs.append(F.col(order_col).desc() if reverse
-                 else F.col(order_col).asc())
-    return df.orderBy(*exprs)
-
-
 def group_by(df: DataFrame, attributes,
              tract_fields=('orig_index', 'trs', 'desc')) -> DataFrame:
     """Group rows, collecting each group's tracts in creation order
@@ -271,25 +256,6 @@ def list_trs(df: DataFrame, remove_duplicates=False,
             'rank', F.row_number().over(Window.orderBy('_ord')))
             .select('rank', 'trs'))
     return base.orderBy('_ord').select('trs')
-
-
-def contains_trs(df: DataFrame, trs_values, match_all=False) -> bool:
-    """Membership test (TRSList.contains -- containers.py:1980-2012):
-    ANY (semi-join non-empty) or ALL (anti-join empty)."""
-    if isinstance(trs_values, str):
-        trs_values = [trs_values]
-    trs_values = list(trs_values)
-    if not trs_values:
-        # vacuous truth: ALL of nothing is present; ANY of nothing
-        # is not (and an empty untyped createDataFrame would raise)
-        return bool(match_all)
-    spark = df.sparkSession
-    probe = spark.createDataFrame([(v,) for v in trs_values], ['trs'])
-    if match_all:
-        missing = probe.join(df.select('trs'), 'trs', 'left_anti')
-        return missing.isEmpty()
-    found = probe.join(df.select('trs'), 'trs', 'left_semi')
-    return not found.isEmpty()
 
 
 def quick_desc(df: DataFrame, delim: str = ': ') -> DataFrame:

@@ -147,34 +147,6 @@ def char_ngrams_col(text_col, n: int = 5) -> F.Column:
     return _char_ngram_udf(n)(normalized_text(text_col))
 
 
-def minhash_signature(shingles, num_perm: int = 32) -> F.Column:
-    """MinHash signature: for permutation i, min over shingles of
-    ``(a_i * h + b_i) mod p`` -- fully native column math.
-
-    a_i/b_i derive from xxhash64 of the permutation index (fixed
-    seed), so signatures are deterministic across runs and engines.
-
-    NOTE: ``F.aggregate`` is a higher-order array function --
-    CodegenFallback, i.e. interpreted per row (see the weighted-
-    sample codegen-cliff note in BENCH.md).  This column form exists
-    for composability/oracle parity; the production path
-    (:func:`minhash_signatures`) uses the fused numpy kernel, which
-    is what every hot caller goes through.
-    """
-    prime = (1 << 31) - 1   # Mersenne prime; keeps products < 2^62
-    sigs = []
-    for i in range(num_perm):
-        a = ((i * 2 + 1) * 0x9E3779B9) % prime or 1
-        b = (i * 2654435761 + 12345) % prime
-        sigs.append(F.aggregate(
-            shingles,
-            F.lit(prime).cast('long'),
-            lambda acc, h: F.least(
-                acc, (F.pmod(h, F.lit(prime)) * F.lit(a)
-                      + F.lit(b)) % F.lit(prime))))
-    return F.array(*sigs)
-
-
 def _perm_coeffs(num_perm: int):
     prime = (1 << 31) - 1
     a = np.array([((i * 2 + 1) * 0x9E3779B9) % prime or 1
@@ -369,28 +341,6 @@ def _lsh_from_sig(with_sig: DataFrame, num_perm: int, bands: int,
                 .filter(matches >= min_sig_matches)
                 .select('id_a', 'id_b'))
     return cand
-
-
-def ngram_jaccard(df_pairs: DataFrame, docs: DataFrame, text_col='text',
-                  id_col='doc_id', k: int = 5) -> DataFrame:
-    """True Jaccard on candidate pairs (the verify stage after LSH).
-
-    Returns exact integer set sizes ``(id_a, id_b, n_inter, n_union)``
-    plus the ``jaccard`` ratio; threshold tests should use the integer
-    columns (``n_inter * q >= n_union * p`` for p/q) -- no float
-    rounding at the decision boundary.
-    """
-    sh = docs.select(F.col(id_col).alias('id'),
-                     shingles_col(F.col(text_col), k).alias('sh'))
-    a = sh.withColumnRenamed('id', 'id_a').withColumnRenamed('sh', 'sh_a')
-    b = sh.withColumnRenamed('id', 'id_b').withColumnRenamed('sh', 'sh_b')
-    j = df_pairs.join(a, 'id_a').join(b, 'id_b')
-    inter = F.size(F.array_intersect('sh_a', 'sh_b'))
-    union = F.size(F.array_union('sh_a', 'sh_b'))
-    return j.select(
-        'id_a', 'id_b',
-        inter.alias('n_inter'), union.alias('n_union'),
-        (inter.cast('double') / union).alias('jaccard'))
 
 
 _POPCNT8 = np.unpackbits(

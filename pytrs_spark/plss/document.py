@@ -324,17 +324,6 @@ def parse_documents_kernel(texts, layout=None, default_ns=None,
             for i, t in enumerate(texts)]
 
 
-def find_sec(text):
-    """All (unpacked) section numbers in the text as '00' strings
-    (plss_preprocess.py:243-257)."""
-    from .tract import unpack_secs
-    out = []
-    for mo in P.multisec_re.finditer(text):
-        secs, _, _ = unpack_secs(mo.group())
-        out.extend(secs)
-    return out
-
-
 def deduce_layout(text, candidates=None):
     """Best-guess layout of the (preprocessed) text
     (plss_parse.py:635-700)."""

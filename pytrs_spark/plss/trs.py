@@ -224,10 +224,3 @@ def is_error(d, twp=True, rge=True, sec=True) -> bool:
     return ((twp and d['twp_num'] is None and not d['twp_undef'])
             or (rge and d['rge_num'] is None and not d['rge_undef'])
             or (sec and d['sec_num'] is None and not d['sec_undef']))
-
-
-def is_undef(d, twp=True, rge=True, sec=True) -> bool:
-    """Whether any checked component is undefined (trs.py:260-274)."""
-    return ((twp and d['twp_undef'])
-            or (rge and d['rge_undef'])
-            or (sec and d['sec_undef']))

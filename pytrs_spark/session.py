@@ -101,7 +101,13 @@ def get_spark(app_name="pytrs_spark", cores=None, shuffle_partitions=None,
 
     ``cores`` and the driver and executor heaps default to the host's
     (:func:`default_cores`, :func:`default_driver_memory`,
-    :func:`default_executor_memory`).
+    :func:`default_executor_memory`).  ``shuffle_partitions`` defaults
+    to ``max(8, cores)``.  ``extra_conf`` is applied last, so it
+    overrides any conf set here (e.g. the 32 MB scan split or the
+    64k-row Arrow batch).
+
+    Also starts :func:`_warm_python_workers_async` (disable with
+    ``SPARK_GRAFT_WARM_WORKERS=0``).
     """
     if cores is None:
         cores = default_cores()
@@ -134,9 +140,7 @@ def get_spark(app_name="pytrs_spark", cores=None, shuffle_partitions=None,
         # must still fan out to >= task-slot scan tasks; the 128 MB
         # default capped a 750 MB / 8-file table at 8-way parallelism.
         # On a real warehouse (TB-scale inputs) either value saturates.
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES",
-                               "33554432"))
+        .config("spark.sql.files.maxPartitionBytes", "33554432")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -145,8 +149,7 @@ def get_spark(app_name="pytrs_spark", cores=None, shuffle_partitions=None,
         # dispatch + IPC framing ~6x more often for the same bytes;
         # measured 9.4 s -> 7.2 s on the 24M-row tile stage.  ~2-10 MB
         # per batch per worker -- well inside worker memory.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                os.environ.get("SPARK_GRAFT_ARROW_BATCH", "65536"))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")

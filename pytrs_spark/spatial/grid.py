@@ -2,9 +2,9 @@
 boxes, a 3-resolution integer cell index, and phash-derived anchor
 points.
 
-Everything except the variable-depth QQ-box offsets is **pure native
-column math** (whole-stage codegen; no Python in the hot path).  The
-QQ recursion mirrors the reference's subdivision definitions
+Everything here is **native column math**: no Python runs in the
+layer build after the parse.  The QQ recursion (:func:`_qq_box`)
+mirrors the reference's subdivision definitions
 (``pytrs/parser/tract/aliquot_parse.py:23-29, 300-362``): the same
 4-way quartering that parses aliquot text *is* the polygon geometry.
 
@@ -23,10 +23,8 @@ same H3/S2-style hierarchy semantics (parent/child by coordinate
 shift) on a synthetic grid, with zero native dependencies.
 """
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..datagen import X0, X1, Y0, Y1
 
@@ -54,54 +52,37 @@ def section_box(twp_num, twp_ns, rge_num, rge_ew, sec_num):
     return xmin, ymin, xmin + 1.0, ymin + 1.0
 
 
-# QQ-box fraction offsets: variable-depth string -> (fx0, fy0, fx1, fy1)
-# within the unit section.  Vectorized pandas UDF (polygon side only --
-# small relative to the image side).
-
-_FRAC = T.StructType([
-    T.StructField("fx0", T.DoubleType()),
-    T.StructField("fy0", T.DoubleType()),
-    T.StructField("fx1", T.DoubleType()),
-    T.StructField("fy1", T.DoubleType()),
-])
-
-
-def _qq_fractions(qq: str):
-    """Fraction box of an aliquot string within its section.
-
-    Components are read outermost-last ('NENW' = NE of NW): recurse
-    from the rightmost.  Halves ('N2') halve the current box; quarters
-    quarter it -- the inverse of the parse-side subdivision.
+def _sub_box(box, comp) -> Column:
+    """One aliquot component applied to a fraction box: halves
+    (``N2``) halve it, quarters (``NE``) quarter it -- the inverse of
+    the parse-side subdivision.  Any other component leaves it as is.
     """
-    x0, y0, x1, y1 = 0.0, 0.0, 1.0, 1.0
-    if qq == 'ALL' or not qq:
-        return x0, y0, x1, y1
-    comps = [qq[i:i + 2] for i in range(0, len(qq), 2)]
-    for comp in reversed(comps):
-        mx, my = (x0 + x1) / 2.0, (y0 + y1) / 2.0
-        if comp == 'N2':
-            y0 = my
-        elif comp == 'S2':
-            y1 = my
-        elif comp == 'E2':
-            x0 = mx
-        elif comp == 'W2':
-            x1 = mx
-        elif comp == 'NE':
-            x0, y0 = mx, my
-        elif comp == 'NW':
-            x1, y0 = mx, my
-        elif comp == 'SE':
-            x0, y1 = mx, my
-        elif comp == 'SW':
-            x1, y1 = mx, my
-    return x0, y0, x1, y1
+    mx = (box['x0'] + box['x1']) / 2.0
+    my = (box['y0'] + box['y1']) / 2.0
+    return F.struct(
+        F.when(comp.isin('E2', 'NE', 'SE'), mx)
+        .otherwise(box['x0']).alias('x0'),
+        F.when(comp.isin('N2', 'NE', 'NW'), my)
+        .otherwise(box['y0']).alias('y0'),
+        F.when(comp.isin('W2', 'NW', 'SW'), mx)
+        .otherwise(box['x1']).alias('x1'),
+        F.when(comp.isin('S2', 'SE', 'SW'), my)
+        .otherwise(box['y1']).alias('y1'))
 
 
-@F.pandas_udf(_FRAC)
-def qq_fraction_box(qqs: pd.Series) -> pd.DataFrame:
-    rows = [_qq_fractions(q) for q in qqs]
-    return pd.DataFrame(rows, columns=['fx0', 'fy0', 'fx1', 'fy1'])
+def _qq_box(qq) -> Column:
+    """Fraction box ``struct<x0, y0, x1, y1>`` of an aliquot string
+    within its unit section, native columns.
+
+    Components are read outermost-last ('NENW' = NE of NW): fold from
+    the rightmost two-character component.  ``'ALL'``, ``''`` and null
+    are the unit box, and a trailing odd character is ignored.
+    """
+    comps = F.reverse(F.regexp_extract_all(
+        F.coalesce(qq, F.lit('')), F.lit('(?s)(..)'), 1))
+    unit = F.struct(F.lit(0.0).alias('x0'), F.lit(0.0).alias('y0'),
+                    F.lit(1.0).alias('x1'), F.lit(1.0).alias('y1'))
+    return F.aggregate(comps, unit, _sub_box)
 
 
 def build_polygon_layer(tracts: DataFrame) -> DataFrame:
@@ -111,12 +92,11 @@ def build_polygon_layer(tracts: DataFrame) -> DataFrame:
     sec_num, qqs`` (from ``operators.parse.decompose_trs`` +
     ``parse_tract_details``).  Output: ``trs, qq, depth, xmin, ymin,
     xmax, ymax, ring_xs, ring_ys`` (vertex ring as flat coordinate
-    arrays for the exact PIP stage).
+    arrays for the exact point-in-polygon test).
 
-    The QQ explode is native; the per-row fraction lookup is a trivial
-    Arrow-batched UDF applied inline (a distinct+broadcast-join memo
-    was measured slower here: it doubles the parse lineage and adds a
-    shuffle for a UDF that costs microseconds per row).
+    All native: the QQ explode, the aliquot box (:func:`_qq_box`) and
+    the section offset.  Only the parse that produced ``qqs`` runs in
+    Python.
     """
     valid = tracts.filter(
         F.col('twp_num').isNotNull() & F.col('rge_num').isNotNull()
@@ -125,18 +105,20 @@ def build_polygon_layer(tracts: DataFrame) -> DataFrame:
         'trs', 'twp_num', 'twp_ns', 'rge_num', 'rge_ew', 'sec_num',
         F.explode('qqs').alias('qq')).dropDuplicates(['trs', 'qq'])
 
-    j = exploded.withColumn('_f', qq_fraction_box(F.col('qq'))) \
-        .select('*', '_f.fx0', '_f.fy0', '_f.fx1', '_f.fy1').drop('_f')
+    # Its own projection: the fold is interpreted and holds lambda
+    # variables, so Spark would neither codegen it nor share it across
+    # the 12 references below.
+    j = exploded.withColumn('_box', _qq_box(F.col('qq')))
+    box = F.col('_box')
     sx0, sy0, _, _ = section_box(
         F.col('twp_num'), F.col('twp_ns'), F.col('rge_num'),
         F.col('rge_ew'), F.col('sec_num'))
-    xmin = sx0 + F.col('fx0')
-    ymin = sy0 + F.col('fy0')
-    xmax = sx0 + F.col('fx1')
-    ymax = sy0 + F.col('fy1')
-    # Vertex ring kept as two flat double arrays (ring_xs / ring_ys):
-    # the PIP kernel stacks them straight into numpy -- array<struct>
-    # cost ~2x more through Arrow and forced per-row unpacking.
+    xmin = sx0 + box['x0']
+    ymin = sy0 + box['y0']
+    xmax = sx0 + box['x1']
+    ymax = sy0 + box['y1']
+    # Vertex ring kept as two flat double arrays (ring_xs / ring_ys);
+    # join._cell_index pads them natively to the layer's longest ring.
     ring_xs = F.array(xmin, xmax, xmax, xmin)
     ring_ys = F.array(ymin, ymin, ymax, ymax)
     return j.select(

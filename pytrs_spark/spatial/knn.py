@@ -45,16 +45,6 @@ from pyspark.sql import types as T
 from ..datagen import X0, X1, Y0, Y1
 
 
-def section_corners(spark) -> DataFrame:
-    """The integer-mile corner lattice over the covered domain
-    (materialized form; the kNN uses the closed-form range check)."""
-    xs = spark.range(int(X0), int(X1) + 1).select(
-        F.col('id').cast('double').alias('cx'))
-    ys = spark.range(int(Y0), int(Y1) + 1).select(
-        F.col('id').cast('double').alias('cy'))
-    return xs.crossJoin(ys)
-
-
 _TOPK_RESULT = T.StructType([
     T.StructField('topk', T.ArrayType(T.StructType([
         T.StructField('d2', T.DoubleType()),

@@ -29,14 +29,6 @@ from pyspark.sql import functions as F
 ALL = '*'     # sentinel for rolled-up levels (never a valid trs/qq char)
 
 
-def split_trs(trs: Column) -> tuple:
-    """(twprge, sec) from a packed trs like ``154n97w01`` -- the
-    section is always the trailing 2 digits (grid.py packs with
-    lpad(sec, 2, '0'))."""
-    return (F.substring(trs, 1, F.length(trs) - F.lit(2)),
-            F.substring(trs, -2, 2))
-
-
 def tile_pyramid(tiles: DataFrame, trs_col: str = 'trs',
                  qq_col: str = 'qq') -> DataFrame:
     """Multi-level tile counts up the aliquot hierarchy in ONE pass.

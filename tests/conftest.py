@@ -9,7 +9,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 @pytest.fixture(scope="session")
 def spark():
     from pytrs_spark.session import get_spark
-    s = get_spark("pytrs_spark_tests", cores=8, shuffle_partitions=8)
+    s = get_spark("pytrs_spark_tests", shuffle_partitions=8)
     yield s
     s.stop()
 

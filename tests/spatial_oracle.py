@@ -1,13 +1,47 @@
-"""Test-side references for the tile assignment: a numpy all-pairs
-even-odd ray cast over every polygon's ring, and a walker over the
-final executed plan.  Both are independent of
-``pytrs_spark.spatial.join``."""
+"""Test-side references for the polygon layer and the tile
+assignment: a scalar aliquot-box recursion, a numpy all-pairs even-odd
+ray cast over every polygon's ring, and a walker over the final
+executed plan.  All are independent of ``pytrs_spark.spatial``'s
+column expressions."""
 
 import re
 
 import numpy as np
 
 from pytrs_spark.spatial.grid import with_anchor
+
+
+def _qq_fractions(qq):
+    """Fraction box ``(x0, y0, x1, y1)`` of an aliquot string within
+    its unit section.
+
+    Components are read outermost-last ('NENW' = NE of NW): recurse
+    from the rightmost.  Halves ('N2') halve the current box; quarters
+    quarter it -- the inverse of the parse-side subdivision.
+    """
+    x0, y0, x1, y1 = 0.0, 0.0, 1.0, 1.0
+    if qq == 'ALL' or not qq:
+        return x0, y0, x1, y1
+    comps = [qq[i:i + 2] for i in range(0, len(qq), 2)]
+    for comp in reversed(comps):
+        mx, my = (x0 + x1) / 2.0, (y0 + y1) / 2.0
+        if comp == 'N2':
+            y0 = my
+        elif comp == 'S2':
+            y1 = my
+        elif comp == 'E2':
+            x0 = mx
+        elif comp == 'W2':
+            x1 = mx
+        elif comp == 'NE':
+            x0, y0 = mx, my
+        elif comp == 'NW':
+            x1, y0 = mx, my
+        elif comp == 'SE':
+            x0, y1 = mx, my
+        elif comp == 'SW':
+            x1, y1 = mx, my
+    return x0, y0, x1, y1
 
 
 def ray_cast_assign(points, polygons, chunk=64):

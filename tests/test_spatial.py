@@ -2,16 +2,21 @@
 PIP -> tile assignment, asserted against an in-test numpy brute-force
 oracle (FIXTURES.md F3/F4)."""
 
+import itertools
+
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from pytrs_spark import datagen
 from pytrs_spark.pipeline import (
     assign_images_to_tiles,
     polygon_layer_from_descs,
 )
+from pytrs_spark.spatial.grid import build_polygon_layer, section_box
 from pytrs_spark.spatial.join import JOIN_RES
 from spatial_oracle import (
+    _qq_fractions,
     assert_shuffle_strategy,
     bruteforce_tiles,
     final_plan_nodes,
@@ -59,6 +64,56 @@ def test_polygon_layer_is_full_qq_lattice(polygons):
         assert abs((r['ymax'] - r['ymin']) - 0.25) < 1e-12
         assert datagen.X0 <= r['xmin'] < datagen.X1
         assert datagen.Y0 <= r['ymin'] < datagen.Y1
+
+
+_COMPONENTS = ('N2', 'S2', 'E2', 'W2', 'NE', 'NW', 'SE', 'SW')
+
+
+def test_polygon_layer_boxes_match_scalar_recursion(spark):
+    """Every 0-3 component aliquot string, plus ``ALL``, a null, odd
+    tails and unknown components, on one section: each box is the
+    section's origin plus the scalar recursion's fractions, and the
+    layer build itself runs no Python."""
+    qqs = sorted({''.join(c) for n in range(4)
+                  for c in itertools.product(_COMPONENTS, repeat=n)})
+    qqs += ['ALL', None, 'N', 'NEN', 'XX', 'ALLNE', 'NEALL', 'ne']
+    tracts = spark.createDataFrame(
+        [('154n97w01', 154, 'n', 97, 'w', 1, qqs)],
+        'trs string, twp_num int, twp_ns string, rge_num int, '
+        'rge_ew string, sec_num int, qqs array<string>')
+    sx0, sy0, _, _ = section_box(
+        F.col('twp_num'), F.col('twp_ns'), F.col('rge_num'),
+        F.col('rge_ew'), F.col('sec_num'))
+    origin = tracts.select(sx0.alias('x'), sy0.alias('y')).first()
+    layer = build_polygon_layer(tracts)
+    got = {r['qq']: (r['xmin'], r['ymin'], r['xmax'], r['ymax'],
+                     list(r['ring_xs']), list(r['ring_ys']))
+           for r in layer.collect()}
+    assert set(got) == set(qqs)
+    for qq in qqs:
+        fx0, fy0, fx1, fy1 = _qq_fractions(qq)
+        x0, y0 = origin['x'] + fx0, origin['y'] + fy0
+        x1, y1 = origin['x'] + fx1, origin['y'] + fy1
+        assert got[qq] == (x0, y0, x1, y1, [x0, x1, x1, x0],
+                           [y0, y0, y1, y1]), qq
+    assert not python_nodes(layer)
+
+
+def test_polygon_layer_plan_runs_only_the_parse_in_python(spark):
+    """From raw descriptions, the layer's final plan holds one Python
+    node: the parse kernel over ``raw_desc``."""
+    descs = datagen.gen_descs(spark).filter(F.col('doc_id') < 12)
+    layer = polygon_layer_from_descs(descs)
+    layer.collect()
+    py_names = python_nodes(layer)
+    py = [node for name, node in final_plan_nodes(layer)
+          if name in py_names]
+    assert len(py) == 1, [n.getClass().getSimpleName() for n in py]
+    udfs = py[0].udfs()
+    assert udfs.length() == 1
+    assert [udfs.apply(0).children().apply(i).name()
+            for i in range(udfs.apply(0).children().length())] \
+        == ['raw_desc']
 
 
 def test_tile_assignment_matches_bruteforce(spark, polygons, images):
