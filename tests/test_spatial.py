@@ -111,8 +111,8 @@ def test_polygon_layer_plan_runs_only_the_parse_in_python(spark):
     assert len(py) == 1, [n.getClass().getSimpleName() for n in py]
     udfs = py[0].udfs()
     assert udfs.length() == 1
-    assert [udfs.apply(0).children().apply(i).name()
-            for i in range(udfs.apply(0).children().length())] \
+    args = udfs.apply(0).children()
+    assert [args.apply(i).name() for i in range(args.length())] \
         == ['raw_desc']
 
 
