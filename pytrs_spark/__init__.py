@@ -10,6 +10,7 @@ daemons without pulling pyspark before it's needed):
 - ``pytrs_spark.pipeline``   flagship parse->polygon->join->tile flows
 - ``pytrs_spark.raster``     per-aliquot raster tile materialization
 - ``pytrs_spark.lineage``    checkpointed, resumable bucket runs
+- ``pytrs_spark.lifecycle``  the operators' persist/checkpoint/free
 - ``pytrs_spark.streaming``  Structured Streaming front-ends
 - ``pytrs_spark.session``    tuned SparkSession factory
 """

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import lifecycle
+
 
 def _valid_mask(vals: np.ndarray, dim: int = None):
     """(mask, dim) over an object array of embedding rows: a row is
@@ -294,8 +296,8 @@ def sign_sketch(vec_col, dim: int, planes: int = 16,
 def lsh_index(corpus: DataFrame, planes: int = 16, tables: int = 4,
               id_col='vec_id', vec_col='embedding') -> DataFrame:
     """Materializable LSH index: one (vec_id, table, bucket) row per
-    corpus vector per table.  Build once, ``persist()`` (or write out
-    bucketed by (table, bucket)), and hand to
+    corpus vector per table.  Build once, persist it (or write it out
+    bucketed by (table, bucket)), and hand it to
     :func:`lsh_bucket_topk` via ``index=`` -- the per-query cost then
     never re-ships corpus vectors through Arrow.  At 10^12 vectors
     the index build is the one-time O(N) map pass; queries touch only
@@ -327,6 +329,9 @@ def lsh_bucket_topk(corpus: DataFrame, queries: DataFrame, dim: int,
     planes/tables.  Without it, every call pays the full corpus
     sketch pass (all vectors through Arrow) -- fine for one-shot
     jobs, wasteful for query-many serving.
+
+    The candidate id pairs are a checkpoint (see
+    :func:`lifecycle.checkpoint` for its fault-tolerance trade-off).
     """
     sketch = _sketch_udf(planes, tables)
 
@@ -371,11 +376,11 @@ def lsh_bucket_topk(corpus: DataFrame, queries: DataFrame, dim: int,
     # clustered corpus piles into few buckets), so a blind hint can
     # blow the broadcast limit / driver.  Gate it like
     # ngram_jaccard_pairs' bitmap verify (textops.py): the candidate
-    # set is two longs per row, so persist + count is one cheap
+    # set is two longs per row, so checkpoint + count is one cheap
     # ids-only job; hint only under the 64 MB convention, else leave
     # the join to AQE (at that volume the shuffle join is the correct
     # plan anyway).
-    cand = cand.persist()
+    cand = lifecycle.checkpoint(cand)
     n_cand = cand.count()
     cand_j = F.broadcast(cand) if n_cand * 48 <= 64 << 20 else cand
     scored = (cv.join(cand_j, 'vec_id')
@@ -612,7 +617,7 @@ def ivf_index(corpus: DataFrame, n_cells: int = 16,
               train_sample: int = 8192) -> DataFrame:
     """Materializable IVF index: (vec_id, cell, <vec_col>) -- the
     corpus with its inverted-list assignment attached.  Build once,
-    ``persist()`` (or better: write out ``partitionBy('cell')`` so a
+    persist it (or better: write out ``partitionBy('cell')`` so a
     probed query prunes to nprobe/n_cells of the FILES), and hand to
     :func:`ivf_topk` via ``index=``: per-query work then starts from
     a JVM-side cell filter instead of re-shipping every corpus vector

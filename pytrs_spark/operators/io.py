@@ -17,6 +17,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import lifecycle
 from ..plss.config import parse_config
 from .parse import _FULL_RESULT, _ensure_parallelism
 from ..plss import document as doc_kernel
@@ -194,7 +195,9 @@ def stringify_tracts(df: DataFrame, attributes, doc_col: str = None,
                      include_uid: bool = False) -> DataFrame:
     """Project + stringify tract rows for a flat sink: arrays join with
     ``', '``, maps render ``k:v,k:v`` sorted by key (TractWriter
-    semantics)."""
+    semantics).  With ``include_uid`` the doc ranks come from a
+    checkpoint (see :func:`lifecycle.checkpoint` for its
+    fault-tolerance trade-off)."""
     cols = []
     if include_uid:
         if doc_col is None:
@@ -210,9 +213,11 @@ def stringify_tracts(df: DataFrame, attributes, doc_col: str = None,
         distinct = df.select(doc_col).distinct()
         nparts = max(df.sparkSession.sparkContext.defaultParallelism,
                      1)
-        ranged = (distinct.repartitionByRange(nparts, doc_col)
-                  .withColumn('_pid', F.spark_partition_id()))
-        ranged = ranged.persist()
+        # A checkpoint pins each doc's partition id, so the counts and
+        # the ranks below read the same partitioning.
+        ranged = lifecycle.checkpoint(
+            distinct.repartitionByRange(nparts, doc_col)
+            .withColumn('_pid', F.spark_partition_id()))
         counts = {r['_pid']: r['n'] for r in
                   ranged.groupBy('_pid').agg(
                       F.count('*').alias('n')).collect()}
@@ -334,7 +339,8 @@ def shard_by_bytes(df: DataFrame, bytes_col: str, id_col: str,
     balance, never the output (``cum`` is a global prefix either
     way).  Non-numeric ids fall back to ``repartitionByRange`` + the
     partition-id window (two skinny exchanges -- the UID sink's
-    shape).
+    shape), reading the range-partitioned ids as a checkpoint (see
+    :func:`lifecycle.checkpoint` for its fault-tolerance trade-off).
     """
     if (target_bytes is None) == (n_shards is None):
         raise ValueError('exactly one of target_bytes / n_shards')
@@ -373,9 +379,9 @@ def shard_by_bytes(df: DataFrame, bytes_col: str, id_col: str,
         bucketed = skinny.withColumn('_bkt',
                                      F.coalesce(bucket, F.lit(0)))
     else:
-        bucketed = (skinny.repartitionByRange(nparts, id_col)
-                    .withColumn('_bkt', F.spark_partition_id())
-                    .persist())
+        bucketed = lifecycle.checkpoint(
+            skinny.repartitionByRange(nparts, id_col)
+            .withColumn('_bkt', F.spark_partition_id()))
 
     parts = {r['_bkt']: r['s'] for r in
              bucketed.groupBy('_bkt').agg(

@@ -36,6 +36,8 @@ deterministic per key, i.i.d.-like across unrelated keys.
 
 from pyspark.sql import DataFrame, functions as F
 
+from .. import lifecycle
+
 _M31 = (1 << 31) - 1
 _A1, _B1 = 1299709, 2654435761
 _A2, _B2 = 1000003, 12345
@@ -169,7 +171,9 @@ def mixture_sample(df: DataFrame, group_col: str, key_col: str,
     selection -- and any short group (rare at margin 8) escalates its
     threshold and rescans; at t_g = 2^31 the whole group survives, so
     the loop terminates exact.  At 100 TB the shuffle moves
-    ~margin * budget, not the corpus.
+    ~margin * budget, not the corpus.  The survivor set is a
+    checkpoint (see :func:`lifecycle.checkpoint` for its
+    fault-tolerance trade-off).
     """
     if budget < 1:
         raise ValueError('budget must be >= 1')
@@ -206,8 +210,8 @@ def mixture_sample(df: DataFrame, group_col: str, key_col: str,
 
     h = hash_mix(key_col, salt)
     while True:
-        cand = (sub.withColumn('_h', h)
-                .filter(F.col('_h') <= _case(thr)).persist())
+        cand = lifecycle.checkpoint(sub.withColumn('_h', h)
+                                    .filter(F.col('_h') <= _case(thr)))
         got = {r[0]: r[1] or 0 for r in
                cand.groupBy(group_col).agg(F.sum(wcol).alias('m'))
                .collect()}
@@ -215,7 +219,7 @@ def mixture_sample(df: DataFrame, group_col: str, key_col: str,
                  if got.get(g, 0) < need[g] and thr[g] < (1 << 31)]
         if not short:
             break
-        cand.unpersist()
+        lifecycle.free(cand)
         for g in short:
             # max(2, ...) so the escalation grows even if the margin
             # is tuned down to 1 (same guard as weighted_sample's).
@@ -271,11 +275,10 @@ def weighted_sample(df: DataFrame, key_col: str, weight_col: str,
     reruns, and once t >= 2^31 every row survives so the loop always
     terminates with the exact answer.  No shuffle at any corpus
     size; the extra agg + retry loop cost bounded scans of two
-    columns.  The returned plan keeps the ~``margin * k``-row
-    survivor set persisted (it backs the returned DataFrame, letting
-    the guard count and the selection share one corpus scan);
-    that cache is sample-sized, not corpus-sized, and lives until
-    the session drops it.
+    columns.  The returned plan reads the ~``margin * k``-row
+    survivor set as a checkpoint (it lets the guard count and the
+    selection share one corpus scan; see :func:`lifecycle.checkpoint`
+    for its fault-tolerance trade-off).
 
     The threshold shape is also what keeps the race compiled: a
     bare Project(race)->TakeOrdered plan puts the whole unrolled
@@ -342,10 +345,10 @@ def weighted_sample(df: DataFrame, key_col: str, weight_col: str,
             # don't persist the full corpus, just select.
             return cand.orderBy('race', key_col).limit(k)
         # The survivor set is ~margin * k rows by construction --
-        # persist it so the guard count and the selection share ONE
+        # checkpoint it so the guard count and the selection share ONE
         # race-evaluating scan of the corpus.
-        cand = cand.persist()
+        cand = lifecycle.checkpoint(cand)
         if cand.count() >= k:
             return cand.orderBy('race', key_col).limit(k)
-        cand.unpersist()
+        lifecycle.free(cand)
         threshold *= max(2, _SURVIVOR_MARGIN)

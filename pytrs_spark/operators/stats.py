@@ -41,6 +41,7 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
+from .. import lifecycle
 from .sampling import hash_mix
 
 _RANK_SALT = 23459
@@ -201,8 +202,8 @@ def quantiles_exact(df: DataFrame, col: str, qs,
     # engines -- the DuckDB oracle's ordering differs from Spark's).
     base = df.filter(F.col(col).isNotNull()).select(
         F.col(col).cast('double').alias('v')).filter(~F.isnan('v'))
-    base = base.persist()
-    try:
+    with lifecycle.scope() as s:
+        base = s.persisted(base)
         stats = base.agg(
             F.min('v').alias('lo'), F.max('v').alias('hi'),
             F.count('*').alias('n')).collect()[0]
@@ -297,8 +298,6 @@ def quantiles_exact(df: DataFrame, col: str, qs,
             live = nxt
         return spark.createDataFrame(
             sorted(out), 'q double, value double')
-    finally:
-        base.unpersist()
 
 
 def histogram(df: DataFrame, col: str, lo: float, hi: float,

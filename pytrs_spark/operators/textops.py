@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import lifecycle
+
 _MERSENNE = (1 << 61) - 1
 
 
@@ -257,6 +259,10 @@ def minhash_lsh_candidates(df: DataFrame, text_col='text',
     receive ``{'dropped_rows', 'dropped_buckets'}`` (costs one extra
     count job), otherwise a warning with the cap is emitted whenever a
     cap is set.
+
+    With the signature prefilter on (``min_sig_matches`` > 0) the
+    output is a checkpoint (see :func:`lifecycle.checkpoint` for its
+    fault-tolerance trade-off); otherwise it is a lazy plan.
     """
     if not 1 <= bands <= num_perm or num_perm % bands:
         # bands > num_perm would make every band slice empty (one
@@ -265,30 +271,30 @@ def minhash_lsh_candidates(df: DataFrame, text_col='text',
         raise ValueError(
             f'bands must divide num_perm ({num_perm}), got {bands}')
     with_sig = minhash_signatures(df, text_col, id_col, k, num_perm)
-    return _lsh_from_sig(with_sig, num_perm=num_perm, bands=bands,
-                         max_bucket=max_bucket, drop_stats=drop_stats,
-                         min_sig_matches=min_sig_matches)
+    with lifecycle.scope() as s:
+        cand = _lsh_from_sig(s, with_sig, num_perm=num_perm, bands=bands,
+                             max_bucket=max_bucket, drop_stats=drop_stats,
+                             min_sig_matches=min_sig_matches)
+        return (lifecycle.checkpoint(cand) if (min_sig_matches or 0) > 0
+                else cand)
 
 
-def _lsh_from_sig(with_sig: DataFrame, num_perm: int, bands: int,
+def _lsh_from_sig(s, with_sig: DataFrame, num_perm: int, bands: int,
                   max_bucket: int = None, drop_stats: dict = None,
-                  min_sig_matches: int = None,
-                  persist_registry: list = None) -> DataFrame:
+                  min_sig_matches: int = None) -> DataFrame:
     """LSH banding + bucket self-join + optional signature-estimate
     prefilter over a prepared ``(id, sig)`` table -- the shared tail
     of :func:`minhash_lsh_candidates` and :func:`near_duplicate_pairs`
     (which feeds signatures derived from its persisted shingle table
     instead of re-tokenizing).  When the prefilter is on, the plan
     consumes ``with_sig`` from three branches (band explode + both
-    prefilter sides), so the table is persisted here -- otherwise the
-    signature kernel re-runs once per branch (the same multi-branch
-    pathology the jaccard/simhash persists close)."""
+    prefilter sides), so the table is persisted in the caller's
+    lifecycle scope ``s`` -- otherwise the signature kernel re-runs
+    once per branch -- and the caller must materialize the result
+    before ``s`` exits."""
     rows_per_band = num_perm // bands
-    if min_sig_matches is not None and min_sig_matches > 0:
-        from pyspark import StorageLevel
-        with_sig = with_sig.persist(StorageLevel.MEMORY_AND_DISK)
-        if persist_registry is not None:
-            persist_registry.append(with_sig)
+    if (min_sig_matches or 0) > 0:
+        with_sig = s.persisted(with_sig)
     banded = with_sig.select(
         'id',
         F.explode(F.transform(
@@ -323,7 +329,7 @@ def _lsh_from_sig(with_sig: DataFrame, num_perm: int, bands: int,
             .select(F.col('l.id').alias('id_a'),
                     F.col('r.id').alias('id_b'))
             .distinct())
-    if min_sig_matches is not None and min_sig_matches > 0:
+    if (min_sig_matches or 0) > 0:
         # Signature-estimate prefilter: the minhash signature itself
         # estimates Jaccard (fraction of equal slots), so candidates
         # far below the target similarity skip the expensive exact
@@ -399,8 +405,7 @@ _popcount_and_udf = F.pandas_udf(T.IntegerType())(
 def ngram_jaccard_pairs(docs: DataFrame, text_col='text',
                         id_col='doc_id', n: int = 5, threshold=(4, 5),
                         prefix_filter: bool = True,
-                        bitmap_max_bits: int = 1 << 16,
-                        persist: bool = True) -> DataFrame:
+                        bitmap_max_bits: int = 1 << 16) -> DataFrame:
     """ALL pairs with exact n-gram Jaccard >= p/q -- the exact tier of
     the dedup family (brief: "n-gram Jaccard" dedup).  Unlike
     :func:`near_duplicate_pairs` (MinHash+LSH, probabilistic recall)
@@ -461,143 +466,130 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col='text',
     The gram index / bitmaps feed several plan branches (df count,
     prefix rank, both join sides, verify); without materialization the
     gram-extraction UDF re-evaluates once per branch, so they are
-    persisted MEMORY_AND_DISK by default (``persist=False`` opts out).
-    A production pipeline would write the gram index/codes to storage
-    once -- the persist is the single-job stand-in for that.
+    persisted MEMORY_AND_DISK for the call and freed before it
+    returns.  A production pipeline would write the gram index/codes
+    to storage once -- the persist is the single-job stand-in for
+    that.  The output is a checkpoint (see
+    :func:`lifecycle.checkpoint` for its fault-tolerance trade-off).
     """
-    from pyspark import StorageLevel
     p, q = threshold
     if not (1 <= p <= q):
         raise ValueError(f'threshold must be a fraction 0 < p/q <= 1, '
                          f'got {threshold}')
 
-    _handles = []
+    with lifecycle.scope() as s:
+        # Persist the GRAM TABLE itself (not just its explosion): every
+        # downstream branch -- the exploded index, the bitmap packs, and
+        # the array-verify fallback's two join sides -- re-evaluates the
+        # gram-extraction UDF otherwise (a full re-tokenization of the
+        # corpus per branch).
+        grams = s.persisted(
+            docs.select(F.col(id_col).alias('id'),
+                        char_ngrams_col(F.col(text_col), n)
+                        .alias('grams'))
+            .withColumn('sz', F.size('grams'))
+            .filter(F.col('sz') > 0))
+        ex = s.persisted(
+            grams.select('id', 'sz', F.explode('grams').alias('g')))
 
-    def _persist(df):
-        if persist:
-            df = df.persist(StorageLevel.MEMORY_AND_DISK)
-            _handles.append(df)
-        return df
-
-    # Persist the GRAM TABLE itself (not just its explosion): every
-    # downstream branch -- the exploded index, the bitmap packs, and
-    # the array-verify fallback's two join sides -- re-evaluates the
-    # gram-extraction UDF otherwise (a full re-tokenization of the
-    # corpus per branch).
-    grams = _persist(
-        docs.select(F.col(id_col).alias('id'),
-                    char_ngrams_col(F.col(text_col), n)
-                    .alias('grams'))
-        .withColumn('sz', F.size('grams'))
-        .filter(F.col('sz') > 0))
-    ex = _persist(grams.select('id', 'sz', F.explode('grams')
-                               .alias('g')))
-
-    use_bitmap = False
-    packs = None
-    if prefix_filter:
-        dfreq = ex.groupBy('g').agg(F.count(F.lit(1)).alias('_df'))
-        n_universe = dfreq.count()
-        use_bitmap = 0 < n_universe <= bitmap_max_bits
-        n_docs = docs.count() if use_bitmap else 0
-        # prefix length |x| - ceil(t*|x|) + 1, exact rational ceil
-        plen = (F.col('sz')
-                - F.expr(f'(sz * {p} + {q - 1}) div {q}') + 1)
-        if use_bitmap:
-            gdim = dfreq.select(
-                'g', (F.row_number().over(
-                    Window.orderBy('_df', 'g')) - 1).alias('gid'))
-            # gid ascending == (_df, g) ascending: one total order
-            # serves the prefix rank, the join key, and the bitmap.
-            exg = _persist(ex.join(F.broadcast(gdim), 'g')
-                           .select('id', 'sz', 'gid'))
-            w = Window.partitionBy('id').orderBy('gid')
-            idx = _persist(
-                exg.withColumn('_rn', F.row_number().over(w))
-                .filter(F.col('_rn') <= plen)
-                .select('id', 'sz', F.col('gid').alias('key'), '_rn'))
-            packs = (exg.groupBy('id', 'sz')
-                     .agg(F.collect_list('gid').alias('_gids'))
-                     .select('id', 'sz',
-                             _pack_bits_udf(n_universe)(F.col('_gids'))
-                             .alias('_bm')))
+        use_bitmap = False
+        packs = None
+        if prefix_filter:
+            dfreq = ex.groupBy('g').agg(F.count(F.lit(1)).alias('_df'))
+            n_universe = dfreq.count()
+            use_bitmap = 0 < n_universe <= bitmap_max_bits
+            n_docs = docs.count() if use_bitmap else 0
+            # prefix length |x| - ceil(t*|x|) + 1, exact rational ceil
+            plen = (F.col('sz')
+                    - F.expr(f'(sz * {p} + {q - 1}) div {q}') + 1)
+            if use_bitmap:
+                gdim = dfreq.select(
+                    'g', (F.row_number().over(
+                        Window.orderBy('_df', 'g')) - 1).alias('gid'))
+                # gid ascending == (_df, g) ascending: one total order
+                # serves the prefix rank, the join key, and the bitmap.
+                exg = s.persisted(ex.join(F.broadcast(gdim), 'g')
+                                  .select('id', 'sz', 'gid'))
+                w = Window.partitionBy('id').orderBy('gid')
+                idx = s.persisted(
+                    exg.withColumn('_rn', F.row_number().over(w))
+                    .filter(F.col('_rn') <= plen)
+                    .select('id', 'sz', F.col('gid').alias('key'), '_rn'))
+                packs = (exg.groupBy('id', 'sz')
+                         .agg(F.collect_list('gid').alias('_gids'))
+                         .select('id', 'sz',
+                                 _pack_bits_udf(n_universe)(F.col('_gids'))
+                                 .alias('_bm')))
+            else:
+                w = Window.partitionBy('id').orderBy('_df', 'g')
+                idx = s.persisted(
+                    ex.join(dfreq, 'g')
+                    .withColumn('_rn', F.row_number().over(w))
+                    .filter(F.col('_rn') <= plen)
+                    .select('id', 'sz', F.col('g').alias('key'), '_rn'))
         else:
-            w = Window.partitionBy('id').orderBy('_df', 'g')
-            idx = _persist(
-                ex.join(dfreq, 'g')
-                .withColumn('_rn', F.row_number().over(w))
-                .filter(F.col('_rn') <= plen)
-                .select('id', 'sz', F.col('g').alias('key'), '_rn'))
-    else:
-        idx = ex.select('id', 'sz', F.col('g').alias('key'),
-                        F.lit(1).alias('_rn'))
+            idx = ex.select('id', 'sz', F.col('g').alias('key'),
+                            F.lit(1).alias('_rn'))
 
-    a, b = idx.alias('a'), idx.alias('b')
-    cond = ((F.col('a.key') == F.col('b.key'))
-            & (F.col('a.id') < F.col('b.id'))
-            & (F.col('a.sz') * q >= F.col('b.sz') * p)
-            & (F.col('b.sz') * q >= F.col('a.sz') * p))
-    if prefix_filter:
-        # positional filter: this match's tail must be able to carry
-        # the required overlap alpha = ceil(p*(sa+sb)/(p+q))
-        alpha = F.expr(f'({p} * (a.sz + b.sz) + {p + q - 1}) '
-                       f'div {p + q}')
-        cond = cond & (F.least(
-            F.col('a.sz') - F.col('a._rn') + 1,
-            F.col('b.sz') - F.col('b._rn') + 1) >= alpha)
-    cand = (a.join(b, cond)
-            .select(F.col('a.id').alias('id_a'),
-                    F.col('b.id').alias('id_b'))
-            .distinct())
+        a, b = idx.alias('a'), idx.alias('b')
+        cond = ((F.col('a.key') == F.col('b.key'))
+                & (F.col('a.id') < F.col('b.id'))
+                & (F.col('a.sz') * q >= F.col('b.sz') * p)
+                & (F.col('b.sz') * q >= F.col('a.sz') * p))
+        if prefix_filter:
+            # positional filter: this match's tail must be able to
+            # carry the required overlap alpha = ceil(p*(sa+sb)/(p+q))
+            alpha = F.expr(f'({p} * (a.sz + b.sz) + {p + q - 1}) '
+                           f'div {p + q}')
+            cond = cond & (F.least(
+                F.col('a.sz') - F.col('a._rn') + 1,
+                F.col('b.sz') - F.col('b._rn') + 1) >= alpha)
+        cand = (a.join(b, cond)
+                .select(F.col('a.id').alias('id_a'),
+                        F.col('b.id').alias('id_b'))
+                .distinct())
 
-    if use_bitmap:
-        pa = packs.select(F.col('id').alias('id_a'),
-                          F.col('_bm').alias('_bma'),
-                          F.col('sz').alias('_sa'))
-        pb = packs.select(F.col('id').alias('id_b'),
-                          F.col('_bm').alias('_bmb'),
-                          F.col('sz').alias('_sb'))
-        # The packs table comes out of a UDF, so Catalyst has no size
-        # statistics and falls back to a sort-merge join -- which
-        # shuffles every candidate row WITH its bitmaps twice
-        # (measured 153 s vs 8 s at 6.2M candidates).  We know the
-        # true size: n_docs x (U/8 + key overhead).  Broadcast when it
-        # fits; at corpus sizes where it doesn't, the shuffle join is
-        # the correct plan anyway.
-        est_bytes = n_docs * (n_universe // 8 + 32)
-        if est_bytes <= 64 << 20:
-            pa, pb = F.broadcast(pa), F.broadcast(pb)
-        verified = (cand.join(pa, 'id_a').join(pb, 'id_b')
-                    .withColumn('n_inter',
-                                _popcount_and_udf('_bma', '_bmb')))
-    else:
-        ga = grams.select(F.col('id').alias('id_a'),
-                          F.col('grams').alias('_ga'),
-                          F.col('sz').alias('_sa'))
-        gb = grams.select(F.col('id').alias('id_b'),
-                          F.col('grams').alias('_gb'),
-                          F.col('sz').alias('_sb'))
-        verified = (cand.join(ga, 'id_a').join(gb, 'id_b')
-                    .withColumn('n_inter',
-                                F.size(F.array_intersect('_ga', '_gb'))))
-    out = (verified
-           .withColumn('n_union',
-                       F.col('_sa') + F.col('_sb') - F.col('n_inter'))
-           .filter(F.col('n_inter') * q >= F.col('n_union') * p)
-           .select('id_a', 'id_b',
-                   F.col('n_inter').cast('int').alias('n_inter'),
-                   F.col('n_union').cast('int').alias('n_union')))
-    # Eager finish under persist=True (same session-lifetime hygiene
-    # as near_duplicate_pairs): the gram/index persists are corpus-
-    # sized and otherwise stay resident until session end, taxing
-    # every later workload; the output pair set is bounded by the
-    # corpus's duplication mass.  persist=False keeps the fully lazy
-    # plan for callers that manage their own lifecycle.
-    if persist:
-        out = _checkpoint_fresh(out)
-        for h in _handles:
-            h.unpersist()
-    return out
+        if use_bitmap:
+            pa = packs.select(F.col('id').alias('id_a'),
+                              F.col('_bm').alias('_bma'),
+                              F.col('sz').alias('_sa'))
+            pb = packs.select(F.col('id').alias('id_b'),
+                              F.col('_bm').alias('_bmb'),
+                              F.col('sz').alias('_sb'))
+            # The packs table comes out of a UDF, so Catalyst has no
+            # size statistics and falls back to a sort-merge join --
+            # which shuffles every candidate row WITH its bitmaps twice
+            # (measured 153 s vs 8 s at 6.2M candidates).  We know the
+            # true size: n_docs x (U/8 + key overhead).  Broadcast when
+            # it fits; at corpus sizes where it doesn't, the shuffle
+            # join is the correct plan anyway.
+            est_bytes = n_docs * (n_universe // 8 + 32)
+            if est_bytes <= 64 << 20:
+                pa, pb = F.broadcast(pa), F.broadcast(pb)
+            verified = (cand.join(pa, 'id_a').join(pb, 'id_b')
+                        .withColumn('n_inter',
+                                    _popcount_and_udf('_bma', '_bmb')))
+        else:
+            ga = grams.select(F.col('id').alias('id_a'),
+                              F.col('grams').alias('_ga'),
+                              F.col('sz').alias('_sa'))
+            gb = grams.select(F.col('id').alias('id_b'),
+                              F.col('grams').alias('_gb'),
+                              F.col('sz').alias('_sb'))
+            verified = (cand.join(ga, 'id_a').join(gb, 'id_b')
+                        .withColumn('n_inter',
+                                    F.size(F.array_intersect('_ga', '_gb'))))
+        out = (verified
+               .withColumn('n_union',
+                           F.col('_sa') + F.col('_sb') - F.col('n_inter'))
+               .filter(F.col('n_inter') * q >= F.col('n_union') * p)
+               .select('id_a', 'id_b',
+                       F.col('n_inter').cast('int').alias('n_inter'),
+                       F.col('n_union').cast('int').alias('n_union')))
+        # The output pair set is bounded by the corpus's duplication
+        # mass; the corpus-sized gram and index tables are freed at
+        # scope exit.
+        return lifecycle.checkpoint(out)
 
 
 def near_duplicate_pairs(docs: DataFrame, text_col='text',
@@ -646,113 +638,111 @@ def near_duplicate_pairs(docs: DataFrame, text_col='text',
     loosens as the threshold falls (~2.8e-3 at threshold 0.4,
     num_perm=32; Chernoff exponent ~ num_perm * (p/q) / 8).  For low
     thresholds or small num_perm, pass ``min_sig_matches=None``.
+
+    The output is a checkpoint (see :func:`lifecycle.checkpoint` for
+    its fault-tolerance trade-off); the shingle, signature and member
+    tables are freed before the call returns.
     """
     p, q = threshold
-    from pyspark import StorageLevel
     base = docs.select(
         F.col(id_col).alias('id'),
         F.col(text_col).alias('_text'),
         F.xxhash64(normalized_text(F.col(text_col))).alias('_h'))
     reps = base.groupBy('_h').agg(F.min('id').alias('rep_id'))
-    # (id, rep_id) membership -- only ids+hashes shuffle, never text.
-    # Persisted (same skinny-row MEMORY_AND_DISK convention as the
-    # shingle table below): FOUR plan branches consume it (ma/mb in
-    # the cross expansion, m1/m2 in the within pairs), and each
-    # un-persisted branch re-ran the base scan + rep groupBy + join.
-    member = base.select('id', '_h').join(reps, '_h') \
-        .select('id', 'rep_id').persist(StorageLevel.MEMORY_AND_DISK)
-    rep_docs = base.join(
-        reps.select(F.col('rep_id').alias('id')), 'id') \
-        .select('id', F.col('_text').alias('text'))
+    with lifecycle.scope() as s:
+        # (id, rep_id) membership -- only ids+hashes shuffle, never
+        # text.  Persisted (same skinny-row MEMORY_AND_DISK convention
+        # as the shingle table below): FOUR plan branches consume it
+        # (ma/mb in the cross expansion, m1/m2 in the within pairs),
+        # and each un-persisted branch re-ran the base scan + rep
+        # groupBy + join.
+        member = s.persisted(base.select('id', '_h').join(reps, '_h')
+                           .select('id', 'rep_id'))
+        rep_docs = base.join(
+            reps.select(F.col('rep_id').alias('id')), 'id') \
+            .select('id', F.col('_text').alias('text'))
 
-    # Prefilter candidates whose signature-estimated similarity is far
-    # below the target (half the threshold) before the exact verify;
-    # see the docstring for the false-negative bound and the
-    # min_sig_matches=None exact bypass.
-    if min_sig_matches == 'auto':
-        min_sig = int((p * num_perm) // (2 * q))
-    else:
-        min_sig = min_sig_matches
-    # ONE shingle pass serves everything downstream: the persisted
-    # (id, shingles) table feeds the MinHash signatures (permutation
-    # sweep only -- no re-tokenization), both sides of the exact
-    # verify, and the within-group size lookup.  Before this the
-    # shingle/signature kernels re-ran once per plan branch (3x sig +
-    # 3x shingles measured on the bench corpus: ~6 s of duplicate
-    # kernel work in an 11 s wall).  Same persist convention --
-    # MEMORY_AND_DISK, skinny rows -- as ngram_jaccard_pairs.
-    from pyspark import StorageLevel
-    sh_tab = rep_docs.select(
-        'id', shingles_col(F.col('text'), k).alias('_sh')) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    with_sig = sh_tab.select(
-        'id', _sig_from_shingles_udf(num_perm)(F.col('_sh')).alias('sig'))
-    _persisted = [member, sh_tab]
-    cand = _lsh_from_sig(with_sig, num_perm=num_perm, bands=bands,
-                         max_bucket=max_bucket, drop_stats=drop_stats,
-                         min_sig_matches=min_sig,
-                         persist_registry=_persisted)
-    sha = sh_tab.select(F.col('id').alias('id_a'),
-                        F.col('_sh').alias('_sha'))
-    shb = sh_tab.select(F.col('id').alias('id_b'),
-                        F.col('_sh').alias('_shb'))
-    # The shingle arrays are DISTINCT sorted hashes (np.unique), so
-    # |A u B| = |A| + |B| - |A n B| exactly: ONE array_intersect per
-    # candidate instead of intersect + union (the union's hash-set
-    # pass was half the verify cost), and the size bound implied by
-    # J >= p/q (q*min(|A|,|B|) >= p*max) drops size-incompatible
-    # candidates before any set op.  Both rewrites are exact --
-    # neither can change which pairs qualify or their counts.
-    _sa = F.size('_sha')
-    _sb = F.size('_shb')
-    _inter = F.size(F.array_intersect('_sha', '_shb'))
-    near_reps = (cand.join(sha, 'id_a').join(shb, 'id_b')
-                 .filter(F.least(_sa, _sb) * q
-                         >= F.greatest(_sa, _sb) * p)
-                 .select('id_a', 'id_b',
-                         _inter.alias('n_inter'),
-                         (_sa + _sb - _inter).alias('n_union'))
-                 .filter(F.col('n_inter') * q >= F.col('n_union') * p))
+        # Prefilter candidates whose signature-estimated similarity is
+        # far below the target (half the threshold) before the exact
+        # verify; see the docstring for the false-negative bound and
+        # the min_sig_matches=None exact bypass.
+        if min_sig_matches == 'auto':
+            min_sig = int((p * num_perm) // (2 * q))
+        else:
+            min_sig = min_sig_matches
+        # ONE shingle pass serves everything downstream: the persisted
+        # (id, shingles) table feeds the MinHash signatures
+        # (permutation sweep only -- no re-tokenization), both sides of
+        # the exact verify, and the within-group size lookup.  Before
+        # this the shingle/signature kernels re-ran once per plan
+        # branch (3x sig + 3x shingles measured on the bench corpus:
+        # ~6 s of duplicate kernel work in an 11 s wall).  Same persist
+        # convention -- MEMORY_AND_DISK, skinny rows -- as
+        # ngram_jaccard_pairs.
+        sh_tab = s.persisted(rep_docs.select(
+            'id', shingles_col(F.col('text'), k).alias('_sh')))
+        with_sig = sh_tab.select('id', _sig_from_shingles_udf(num_perm)(
+            F.col('_sh')).alias('sig'))
+        cand = _lsh_from_sig(s, with_sig, num_perm=num_perm, bands=bands,
+                             max_bucket=max_bucket, drop_stats=drop_stats,
+                             min_sig_matches=min_sig)
+        sha = sh_tab.select(F.col('id').alias('id_a'),
+                            F.col('_sh').alias('_sha'))
+        shb = sh_tab.select(F.col('id').alias('id_b'),
+                            F.col('_sh').alias('_shb'))
+        # The shingle arrays are DISTINCT sorted hashes (np.unique), so
+        # |A u B| = |A| + |B| - |A n B| exactly: ONE array_intersect
+        # per candidate instead of intersect + union (the union's
+        # hash-set pass was half the verify cost), and the size bound
+        # implied by J >= p/q (q*min(|A|,|B|) >= p*max) drops
+        # size-incompatible candidates before any set op.  Both
+        # rewrites are exact -- neither can change which pairs qualify
+        # or their counts.
+        _sa = F.size('_sha')
+        _sb = F.size('_shb')
+        _inter = F.size(F.array_intersect('_sha', '_shb'))
+        near_reps = (cand.join(sha, 'id_a').join(shb, 'id_b')
+                     .filter(F.least(_sa, _sb) * q
+                             >= F.greatest(_sa, _sb) * p)
+                     .select('id_a', 'id_b',
+                             _inter.alias('n_inter'),
+                             (_sa + _sb - _inter).alias('n_union'))
+                     .filter(F.col('n_inter') * q >= F.col('n_union') * p))
 
-    # Cross-group expansion: every member of group(id_a) pairs with
-    # every member of group(id_b); counts equal the rep pair's.
-    ma = member.select(F.col('rep_id').alias('id_a'),
-                       F.col('id').alias('_ma'))
-    mb = member.select(F.col('rep_id').alias('id_b'),
-                       F.col('id').alias('_mb'))
-    cross = (near_reps.join(ma, 'id_a').join(mb, 'id_b')
-             .select(F.least('_ma', '_mb').alias('id_a'),
-                     F.greatest('_ma', '_mb').alias('id_b'),
-                     'n_inter', 'n_union'))
+        # Cross-group expansion: every member of group(id_a) pairs
+        # with every member of group(id_b); counts equal the rep
+        # pair's.
+        ma = member.select(F.col('rep_id').alias('id_a'),
+                           F.col('id').alias('_ma'))
+        mb = member.select(F.col('rep_id').alias('id_b'),
+                           F.col('id').alias('_mb'))
+        cross = (near_reps.join(ma, 'id_a').join(mb, 'id_b')
+                 .select(F.least('_ma', '_mb').alias('id_a'),
+                         F.greatest('_ma', '_mb').alias('id_b'),
+                         'n_inter', 'n_union'))
 
-    # Within-group pairs: identical texts, Jaccard exactly 1
-    # (n_inter = n_union = |shingle set| of the group's text).
-    sizes = sh_tab.select(
-        F.col('id').alias('rep_id'),
-        F.size('_sh').alias('_n_sh'))
-    m1 = member.alias('m1')
-    m2 = member.alias('m2')
-    within = (m1.join(m2, 'rep_id')
-              .filter(F.col('m1.id') < F.col('m2.id'))
-              .join(sizes, 'rep_id')
-              .select(F.col('m1.id').alias('id_a'),
-                      F.col('m2.id').alias('id_b'),
-                      F.col('_n_sh').alias('n_inter'),
-                      F.col('_n_sh').alias('n_union')))
-    # Eager finish (the dbscan label-table pattern): materialize the
-    # SKINNY pair output once, then FREE the fat shared intermediates
-    # (shingle table, signature table, member table) before
-    # returning.  Left resident they outlive the call by the whole
-    # session -- measured in the full bench suite as 1.3-13x
-    # inflation of every later row (fingerprint 0.29 s -> 3.79 s
-    # in-suite vs 0.46 s isolated) from block-manager pressure.  The
-    # checkpoint is output-sized (pairs + two ints, bounded by the
-    # corpus's duplication mass); downstream actions replay one
-    # lineage-free table instead of the LSH/verify tree.
-    out = _checkpoint_fresh(cross.unionByName(within))
-    for h in _persisted:
-        h.unpersist()
-    return out
+        # Within-group pairs: identical texts, Jaccard exactly 1
+        # (n_inter = n_union = |shingle set| of the group's text).
+        sizes = sh_tab.select(
+            F.col('id').alias('rep_id'),
+            F.size('_sh').alias('_n_sh'))
+        m1 = member.alias('m1')
+        m2 = member.alias('m2')
+        within = (m1.join(m2, 'rep_id')
+                  .filter(F.col('m1.id') < F.col('m2.id'))
+                  .join(sizes, 'rep_id')
+                  .select(F.col('m1.id').alias('id_a'),
+                          F.col('m2.id').alias('id_b'),
+                          F.col('_n_sh').alias('n_inter'),
+                          F.col('_n_sh').alias('n_union')))
+        # Left resident, the shingle, signature and member tables
+        # would outlive the call by the whole session -- measured in
+        # the full bench suite as 1.3-13x inflation of every later row
+        # (fingerprint 0.29 s -> 3.79 s in-suite vs 0.46 s isolated)
+        # from block-manager pressure.  The checkpoint is output-sized
+        # (pairs + two ints, bounded by the corpus's duplication
+        # mass).
+        return lifecycle.checkpoint(cross.unionByName(within))
 
 
 # --- SimHash (spec'd, numpy-vectorized) --------------------------------
@@ -853,8 +843,7 @@ def simhash_near_dup_pairs(docs: DataFrame, text_col='text',
                            id_col='doc_id', max_hamming: int = 3,
                            bands: int = None,
                            max_bucket: int = None,
-                           drop_stats: dict = None,
-                           persist: bool = True) -> DataFrame:
+                           drop_stats: dict = None) -> DataFrame:
     """All document pairs whose 64-bit SimHashes differ in at most
     ``max_hamming`` bits -- SimHash-based near-dup detection as a
     banded Hamming-LSH join.
@@ -895,7 +884,9 @@ def simhash_near_dup_pairs(docs: DataFrame, text_col='text',
     capping breaks the exactness guarantee only for the dropped
     buckets, and is reported, never silent).
 
-    Output: ``(id_a, id_b, hamming)`` with id_a < id_b.
+    Output: ``(id_a, id_b, hamming)`` with id_a < id_b, as a
+    checkpoint (see :func:`lifecycle.checkpoint` for its
+    fault-tolerance trade-off).
 
     Reference parity note: the reference library has no SimHash
     dedup; this operator extends the engine for web-scale
@@ -903,29 +894,17 @@ def simhash_near_dup_pairs(docs: DataFrame, text_col='text',
     fingerprint, cf. Manku et al., WWW'07 -- the r+1-band pigeonhole
     trick is theirs).
     """
-    # Persist the skinny (id, simhash) projection: the banded join
-    # below consumes it from many branches, and un-cached each one
-    # re-runs the simhash kernel over the full text corpus (measured
-    # TEN ArrowEvalPython evaluations in one plan).  16 B/row
-    # MEMORY_AND_DISK -- the ngram_jaccard_pairs convention,
-    # including the ``persist=False`` opt-out for callers managing
-    # their own lifecycle (the blocks otherwise live until the
-    # session GCs the plan; one cached table per call).
-    sh = docs.select(F.col(id_col).alias('id'),
-                     simhash_col(F.col(text_col)).alias('sh'))
-    if persist:
-        sh = sh.persist()
-    out = hamming_near_dup_pairs(
-        sh, id_col='id', hash_col='sh', max_hamming=max_hamming,
-        bands=bands, max_bucket=max_bucket, drop_stats=drop_stats)
-    if persist:
-        # Eager finish (near_duplicate_pairs convention): materialize
-        # the bounded pair output and FREE the per-call cache instead
-        # of leaking one persisted table per invocation until session
-        # end (the r5 ADVICE item on this function).
-        out = _checkpoint_fresh(out)
-        sh.unpersist()
-    return out
+    # Persist the skinny (id, simhash) projection for the call: the
+    # banded join below consumes it from many branches, and un-cached
+    # each one re-runs the simhash kernel over the full text corpus
+    # (measured TEN ArrowEvalPython evaluations in one plan).
+    with lifecycle.scope() as s:
+        sh = s.persisted(docs.select(
+            F.col(id_col).alias('id'),
+            simhash_col(F.col(text_col)).alias('sh')))
+        return lifecycle.checkpoint(hamming_near_dup_pairs(
+            sh, id_col='id', hash_col='sh', max_hamming=max_hamming,
+            bands=bands, max_bucket=max_bucket, drop_stats=drop_stats))
 
 
 def _hamming_pick_blocks(n_keys: int, k: int) -> int:
@@ -1782,79 +1761,6 @@ def bigram_lm_score(docs: DataFrame, text_col='text', id_col='doc_id',
 
 # --- connected components over near-dup pair graphs ----------------------
 
-def _checkpoint_fresh(df: DataFrame) -> DataFrame:
-    """``localCheckpoint`` that does NOT inherit the source plan's
-    size-estimate statistics.
-
-    Spark 4's ``localCheckpoint`` snapshots the source plan's
-    ``Statistics`` into the new ``LogicalRDD`` (``originStats``).  In
-    an iterative loop whose round plan self-joins the carried table,
-    each generation inherits the previous round's JOIN-PRODUCT
-    estimate and the next round squares it again: sizeInBytes grows
-    doubly-exponentially, and by ~round 20 the BigInteger stats
-    arithmetic itself kills the driver (measured on the 200k-point
-    DBSCAN core graph: per-round wall 1.3 s -> 11.5 s -> OOM at 1 GiB
-    heap; 'BigInteger would overflow supported range' at 48 GiB).
-    The plan TREE stays flat -- only the stats recurse.
-
-    Fix: rebuild the checkpointed LogicalRDD with ``originStats``
-    empty (public case-class ``copy``), so every generation reports
-    the conservative default estimate and per-round stats are
-    CONSTANT.  AQE still broadcast-plans small label tables at
-    runtime from actual shuffle sizes, so nothing is lost.  Fail-safe:
-    any reflection hiccup falls back to the plain checkpoint (correct,
-    just stats-inheriting).
-    """
-    ck = df.localCheckpoint()
-    try:
-        spark = ck.sparkSession
-        jdf = ck._jdf
-        node = jdf.queryExecution().analyzed()
-        jvm = spark._jvm
-        none = jvm.scala.Option.empty()
-        fresh = node.copy(node.output(), node.rdd(),
-                          node.outputPartitioning(),
-                          node.outputOrdering(), node.isStreaming(),
-                          node.stream(), jdf.sparkSession(), none, none)
-        jnew = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-            jdf.sparkSession(), fresh)
-        return DataFrame(jnew, spark)
-    except Exception as ex:  # noqa: BLE001 -- degraded, not fatal
-        # The fallback is CORRECT but re-enters the documented
-        # stats-inheritance blowup past ~15 iterative rounds -- warn
-        # once so a Spark-upgrade-induced reflection break is visible
-        # instead of resurfacing as a mystery driver OOM.
-        global _CKPT_STRIP_WARNED
-        if not _CKPT_STRIP_WARNED:
-            _CKPT_STRIP_WARNED = True
-            warnings.warn(
-                'checkpoint stats-strip failed '
-                f'({type(ex).__name__}: {ex}); iterative loops fall '
-                'back to stats-inheriting checkpoints, which blow up '
-                'the size estimate past ~15 rounds -- check the '
-                'LogicalRDD.copy reflection against this Spark '
-                'version', RuntimeWarning)
-        return ck
-
-
-_CKPT_STRIP_WARNED = False
-
-
-def _unpersist_checkpoint(df: DataFrame) -> None:
-    """Free a superseded label generation's checkpoint blocks.
-
-    ``localCheckpoint`` persists MEMORY_AND_DISK blocks that are only
-    garbage-collected when Python drops the last reference AND the
-    JVM ContextCleaner gets around to it; an iterative loop otherwise
-    accumulates one generation per round in the block manager.
-    Best-effort: failures are ignored (the GC path still applies).
-    """
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:  # noqa: BLE001
-        pass
-
-
 def _cc_local(edges: DataFrame, stats: dict = None) -> DataFrame:
     """Driver-side closure for a SMALL edge set (raw directed pairs;
     symmetrized and deduped in numpy below): collect the
@@ -1963,17 +1869,16 @@ def connected_components(pairs: DataFrame, id_a='id_a', id_b='id_b',
     (edge join + min agg + contraction distinct) over (long, long)
     rows, and the contracted edge set SHRINKS geometrically, so late
     rounds are near-free.  The label/edge generations are cut over
-    with ``localCheckpoint`` (eager), not ``persist``: an iterative
+    with :func:`lifecycle.checkpoint`, not ``persist``: an iterative
     DataFrame loop that only persists keeps NESTING the logical plan,
     and Catalyst re-analysis goes super-linear after ~10 rounds
     (measured: a 50k-edge chain graph burned minutes of pure
     driver/analyzer CPU before the fix, seconds after).  Each
-    generation's checkpoint is stats-stripped (``_checkpoint_fresh``)
-    and the superseded generation's blocks are freed eagerly.  On a
-    real cluster localCheckpoint trades fault tolerance of the
-    (skinny) tables for speed; a lost executor restarts the job from
-    the last generation at worst.  Deterministic: min() everywhere,
-    no tie-breaks needed.
+    superseded generation is freed as soon as the next one exists,
+    and every generation is freed if the loop raises.  The distributed
+    path's output is a checkpoint (see :func:`lifecycle.checkpoint`
+    for its fault-tolerance trade-off).  Deterministic: min()
+    everywhere, no tie-breaks needed.
 
     ``stats``: optional dict; on return ``stats['iterations']`` holds
     the number of propagation rounds run to reach the fixpoint
@@ -2005,114 +1910,109 @@ def connected_components(pairs: DataFrame, id_a='id_a', id_b='id_b',
     raw = (pairs.filter(F.col(id_a).isNotNull()
                         & F.col(id_b).isNotNull())
            .select(F.col(id_a).alias('src'), F.col(id_b).alias('dst')))
-    raw_ck = _checkpoint_fresh(raw)
-    n_raw = raw_ck.count()
-    # Size-gated driver closure: when the (materialized, skinny) edge
-    # set is small, the distributed loop's wall is ~100% fixed
-    # per-round JOB overhead, not data -- collect the (long, long)
-    # rows and close locally instead (same min-id semantics, pinned
-    # by tests/test_cc_checkpoint.py equivalence).  The gate counts
-    # raw pair rows (>= distinct undirected pairs, so the bound is
-    # conservative); at the 2M default the collect is ~32 MB of
-    # int64 columns -- the BROADCAST_MAX_ROWS convention.  The local
-    # path symmetrizes and dedups in numpy, skipping the Spark-side
-    # explode + distinct shuffle the distributed loop needs.
-    # local_max_edges=0 forces the distributed path, including for an
-    # empty graph -- a forced caller must always see
-    # mode='distributed'.
-    if local_max_edges and n_raw <= local_max_edges:
-        out = _cc_local(raw_ck, stats=stats)
-        _unpersist_checkpoint(raw_ck)
-        return out
-    sym = raw_ck.select(F.explode(F.array(
-        F.struct(F.col('src'), F.col('dst')),
-        F.struct(F.col('dst').alias('src'),
-                 F.col('src').alias('dst')))).alias('_e')) \
-        .select('_e.src', '_e.dst')
-    edges = _checkpoint_fresh(sym.distinct())
-    _unpersist_checkpoint(raw_ck)
-    n_edges = edges.count()
-    if stats is not None:
-        stats['mode'] = 'distributed'
-    labels = (edges.select(F.col('src').alias('id')).distinct()
-              .withColumn('comp', F.col('id')))
-    labels = _checkpoint_fresh(labels)
-    for it in range(max_iters):
-        # neighbor-min: every vertex offers its component to its
-        # neighbors; take the min of self and offers.
-        offers = (edges.join(labels.withColumnRenamed('id', 'src'),
-                             'src')
-                  .groupBy(F.col('dst').alias('id'))
-                  .agg(F.min('comp').alias('nbr')))
-        stepped = (labels.join(offers, 'id', 'left')
-                   .select('id', F.least('comp', 'nbr').alias('comp')))
-        # pointer jumping: comp <- comp's comp (labels are vertex ids,
-        # so the lookup is a self-join on the label table).
-        jumped = (stepped.alias('s')
-                  .join(stepped.select(F.col('id').alias('comp'),
-                                       F.col('comp').alias('comp2'))
-                        .alias('t'), 'comp', 'left')
-                  .select(F.col('id'),
-                          F.least('comp', 'comp2').alias('comp')))
-        # eager checkpoint truncates the plan; _checkpoint_fresh also
-        # strips the inherited stats estimate (see its docstring: the
-        # self-join estimate would otherwise compound
-        # doubly-exponentially across generations)
-        new_labels = _checkpoint_fresh(jumped)
-        old_labels, labels = labels, new_labels
-        # Edge CONTRACTION: rewrite the (shrinking) edge set through
-        # the new labels and drop intra-supernode edges.  Without it
-        # the min floods ONE graph hop per round (pointer jumping only
-        # compresses already-labeled trees, it cannot help the
-        # frontier), so high-diameter geometric graphs -- DBSCAN core
-        # graphs, meshes -- cost O(diameter) rounds (measured: the
-        # 200k-point bench corpus needed 35+).  Contracted, a labeled
-        # region is ONE supernode, the flood moves a supernode hop per
-        # round, regions double in radius -> O(log diameter) rounds
-        # (same corpus: 7), and the per-round shuffle shrinks with the
-        # edge set instead of staying full-size.
-        if n_edges > 0:
-            new_edges = _checkpoint_fresh(
-                edges
-                .join(labels.select(F.col('id').alias('src'),
-                                    F.col('comp').alias('_cs')), 'src')
-                .join(labels.select(F.col('id').alias('dst'),
-                                    F.col('comp').alias('_cd')), 'dst')
-                .filter(F.col('_cs') != F.col('_cd'))
-                .select(F.col('_cs').alias('src'),
-                        F.col('_cd').alias('dst'))
-                .distinct())
-            _unpersist_checkpoint(edges)
-            _unpersist_checkpoint(old_labels)
-            edges = new_edges
-            # While contracted edges remain, the loop is PROVABLY not
-            # converged (a cross-supernode edge either reduces a label
-            # next round or is dropped by the next contraction), so
-            # the convergence probe is a cheap count over the freshly
-            # materialized skinny edge set -- not a label-table join.
-            n_edges = edges.count()
-            continue
-        # Edges are gone: only pointer-jump settling remains (members
-        # catching up to their representative's final label, 1-2
-        # rounds).  Now probe label stability directly.
-        changed = (labels.alias('n')
-                   .join(old_labels.alias('o'), 'id')
-                   .filter(F.col('n.comp') != F.col('o.comp'))
-                   .count())
-        _unpersist_checkpoint(old_labels)
-        if changed == 0:
-            _unpersist_checkpoint(edges)
-            if stats is not None:
-                stats['iterations'] = it + 1
-            return labels.select(F.col('id').alias('doc_id'),
-                                 F.col('comp').alias('component_id'))
-    # free the final generations before raising: a driver that catches
-    # and retries must not accumulate orphaned checkpoint blocks
-    _unpersist_checkpoint(edges)
-    _unpersist_checkpoint(labels)
-    raise RuntimeError(
-        f'connected_components did not converge in {max_iters} '
-        f'iterations -- graph diameter beyond 2^{max_iters}?')
+    with lifecycle.scope() as s:
+        raw_ck = s.checkpointed(raw)
+        n_raw = raw_ck.count()
+        # Size-gated driver closure: when the (materialized, skinny) edge
+        # set is small, the distributed loop's wall is ~100% fixed
+        # per-round JOB overhead, not data -- collect the (long, long)
+        # rows and close locally instead (same min-id semantics, pinned
+        # by tests/test_cc_checkpoint.py equivalence).  The gate counts
+        # raw pair rows (>= distinct undirected pairs, so the bound is
+        # conservative); at the 2M default the collect is ~32 MB of
+        # int64 columns -- the BROADCAST_MAX_ROWS convention.  The local
+        # path symmetrizes and dedups in numpy, skipping the Spark-side
+        # explode + distinct shuffle the distributed loop needs.
+        # local_max_edges=0 forces the distributed path, including for an
+        # empty graph -- a forced caller must always see
+        # mode='distributed'.
+        if local_max_edges and n_raw <= local_max_edges:
+            return _cc_local(raw_ck, stats=stats)
+        sym = raw_ck.select(F.explode(F.array(
+            F.struct(F.col('src'), F.col('dst')),
+            F.struct(F.col('dst').alias('src'),
+                     F.col('src').alias('dst')))).alias('_e')) \
+            .select('_e.src', '_e.dst')
+        edges = s.checkpointed(sym.distinct())
+        s.free(raw_ck)
+        n_edges = edges.count()
+        if stats is not None:
+            stats['mode'] = 'distributed'
+        labels = s.checkpointed(
+            edges.select(F.col('src').alias('id')).distinct()
+            .withColumn('comp', F.col('id')))
+        for it in range(max_iters):
+            # neighbor-min: every vertex offers its component to its
+            # neighbors; take the min of self and offers.
+            offers = (edges.join(labels.withColumnRenamed('id', 'src'),
+                                 'src')
+                      .groupBy(F.col('dst').alias('id'))
+                      .agg(F.min('comp').alias('nbr')))
+            stepped = (labels.join(offers, 'id', 'left')
+                       .select('id', F.least('comp', 'nbr').alias('comp')))
+            # pointer jumping: comp <- comp's comp (labels are vertex ids,
+            # so the lookup is a self-join on the label table).
+            jumped = (stepped.alias('s')
+                      .join(stepped.select(F.col('id').alias('comp'),
+                                           F.col('comp').alias('comp2'))
+                            .alias('t'), 'comp', 'left')
+                      .select(F.col('id'),
+                              F.least('comp', 'comp2').alias('comp')))
+            # the checkpoint truncates the plan and strips the inherited
+            # stats estimate (see lifecycle.checkpoint: the self-join
+            # estimate would otherwise compound doubly-exponentially
+            # across generations)
+            new_labels = s.checkpointed(jumped)
+            old_labels, labels = labels, new_labels
+            # Edge CONTRACTION: rewrite the (shrinking) edge set through
+            # the new labels and drop intra-supernode edges.  Without it
+            # the min floods ONE graph hop per round (pointer jumping only
+            # compresses already-labeled trees, it cannot help the
+            # frontier), so high-diameter geometric graphs -- DBSCAN core
+            # graphs, meshes -- cost O(diameter) rounds (measured: the
+            # 200k-point bench corpus needed 35+).  Contracted, a labeled
+            # region is ONE supernode, the flood moves a supernode hop per
+            # round, regions double in radius -> O(log diameter) rounds
+            # (same corpus: 7), and the per-round shuffle shrinks with the
+            # edge set instead of staying full-size.
+            if n_edges > 0:
+                new_edges = s.checkpointed(
+                    edges
+                    .join(labels.select(F.col('id').alias('src'),
+                                        F.col('comp').alias('_cs')), 'src')
+                    .join(labels.select(F.col('id').alias('dst'),
+                                        F.col('comp').alias('_cd')), 'dst')
+                    .filter(F.col('_cs') != F.col('_cd'))
+                    .select(F.col('_cs').alias('src'),
+                            F.col('_cd').alias('dst'))
+                    .distinct())
+                s.free(edges)
+                s.free(old_labels)
+                edges = new_edges
+                # While contracted edges remain, the loop is PROVABLY not
+                # converged (a cross-supernode edge either reduces a label
+                # next round or is dropped by the next contraction), so
+                # the convergence probe is a cheap count over the freshly
+                # materialized skinny edge set -- not a label-table join.
+                n_edges = edges.count()
+                continue
+            # Edges are gone: only pointer-jump settling remains (members
+            # catching up to their representative's final label, 1-2
+            # rounds).  Now probe label stability directly.
+            changed = (labels.alias('n')
+                       .join(old_labels.alias('o'), 'id')
+                       .filter(F.col('n.comp') != F.col('o.comp'))
+                       .count())
+            s.free(old_labels)
+            if changed == 0:
+                if stats is not None:
+                    stats['iterations'] = it + 1
+                return s.keep(labels).select(
+                    F.col('id').alias('doc_id'),
+                    F.col('comp').alias('component_id'))
+        raise RuntimeError(
+            f'connected_components did not converge in {max_iters} '
+            f'iterations -- graph diameter beyond 2^{max_iters}?')
 
 
 def keep_one(docs: DataFrame, pairs: DataFrame, id_col: str = 'doc_id',

@@ -69,7 +69,7 @@ def assign_tile_boxes(images: DataFrame, polygons: DataFrame) -> DataFrame:
     Assigns through the flagship's fused path (reusing the prep
     memoized on ``polygons``) and attaches each box by a broadcast
     join on ``(trs, qq)``, which is unique in a layer from
-    :func:`build_polygon_layer` (it deduplicates on that key)."""
+    :func:`build_polygon_layer`."""
     assigned = assign_tiles_fused(with_anchor(images), polygons,
                                   payload_cols=('x', 'y'))
     boxes = polygons.select('trs', 'qq', 'xmin', 'ymin', 'xmax', 'ymax')

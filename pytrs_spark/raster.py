@@ -19,8 +19,11 @@ PAPERS.md):
 
 ``bytes`` enters the plan only here (late projection): the join /
 assignment pipeline runs on a bytes-free projection and this stage
-re-joins ``bytes`` by image_id -- at 100 TB the binary column
-dominates I/O, so it must never ride through the spatial shuffle.
+re-joins ``bytes`` by image_id.  It does not ride the spatial join's
+shuffle, but :func:`materialize_tiles` carries it through its own
+``Exchange hashpartitioning(trs, qq)`` into the grouped map, which
+decodes and regrids every image there; at 100 TB that exchange moves
+the whole binary column.
 """
 
 import zlib
@@ -82,7 +85,8 @@ def materialize_tiles(assignments: DataFrame, images: DataFrame,
     image_id makes the composite deterministic.  The shuffle key is
     (trs, qq) -- dense tiles are bounded by the assignment stage's
     skew handling upstream, and a tile's images must colocate anyway
-    to composite.
+    to composite.  The raw ``bytes`` ride that shuffle: each image is
+    decoded and regridded inside the grouped map, after the exchange.
     """
     need = assignments.select('image_id', 'trs', 'qq', 'x', 'y',
                               'xmin', 'ymin', 'xmax', 'ymax')
@@ -173,8 +177,8 @@ def zonal_pixel_stats(assignments: DataFrame, images: DataFrame,
     per-image decode, which reduces each blob to two longs map-side
     (:func:`decode_pixel_stats` on a two-column projection of the
     raw table); the assignment join then carries (id, 2 longs) --
-    at 100 TB the binary column never rides a shuffle, the same
-    late-materialization contract as :func:`materialize_tiles`.  The
+    at 100 TB the binary column never rides a shuffle (unlike
+    :func:`materialize_tiles`, whose tile exchange carries it).  The
     final per-tile aggregate partial-aggregates map-side; its shuffle
     is bounded by tile count, never image count.  Images with null
     ``bytes`` are dropped (nothing to decode); assignment rows

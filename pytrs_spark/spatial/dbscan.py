@@ -51,6 +51,7 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
+from .. import lifecycle
 from ..operators.textops import connected_components
 from .grid import RES_SIZE
 from .radius import radius_join
@@ -75,7 +76,9 @@ def dbscan(points: DataFrame, eps: float, min_pts: int,
 
     Returns ``(point_id, cluster_id, role)`` -- one row per input
     point; ``role`` in {'core','border','noise'}; ``cluster_id`` is
-    the smallest member core id (null for noise).
+    the smallest member core id (null for noise).  The labels it
+    joins to ``points`` are a checkpoint (see
+    :func:`lifecycle.checkpoint` for its fault-tolerance trade-off).
 
     ``broadcast``: the eps-pair radius self-join can broadcast the
     cell-disk side (fastest when the corpus fits an executor) or
@@ -108,10 +111,9 @@ def dbscan(points: DataFrame, eps: float, min_pts: int,
     # (core counts, core graph and border attach are membership-only)
     # -- keeping it would checkpoint a third more bytes and pay the
     # sqrt for every pair.
-    pairs = radius_join(points, centers, eps, res=res,
-                        broadcast_centers=broadcast,
-                        point_id=point_id, center_id='_c'
-                        ).select('_c', point_id).localCheckpoint()
+    pairs = lifecycle.checkpoint(radius_join(
+        points, centers, eps, res=res, broadcast_centers=broadcast,
+        point_id=point_id, center_id='_c').select('_c', point_id))
     counts = pairs.groupBy('_c').agg(F.count(F.lit(1)).alias('_n'))
     cores = counts.filter(F.col('_n') >= min_pts).select('_c')
 
@@ -138,17 +140,14 @@ def dbscan(points: DataFrame, eps: float, min_pts: int,
               .groupBy('_c')
               .agg(F.min('cluster_id').alias('cluster_id')))
 
-    # Materialize the (small: cores + borders only) label table and
-    # FREE the pair checkpoint: the returned plan then carries one
-    # lineage-free table instead of the core/border join tree, so (a)
-    # every downstream action replays one tiny join, not the whole
-    # graph labeling, and (b) the 2x-pairs checkpoint blocks don't
-    # outlive the call (they used to leak until session end -- one
-    # orphaned multi-MB RDD per dbscan() invocation).
-    labeled = (core_clusters.withColumn('role', F.lit('core'))
-               .unionByName(border.withColumn('role', F.lit('border')))
-               ).localCheckpoint()
-    pairs.unpersist()
+    # Materialize the (small: cores + borders only) label table: the
+    # returned plan then carries one lineage-free table instead of the
+    # core/border join tree, so every downstream action replays one
+    # tiny join, not the whole graph labeling.
+    labeled = lifecycle.checkpoint(
+        core_clusters.withColumn('role', F.lit('core'))
+        .unionByName(border.withColumn('role', F.lit('border'))))
+    lifecycle.free(pairs)
     return (points.select(point_id)
             .join(labeled.withColumnRenamed('_c', point_id),
                   point_id, 'left')

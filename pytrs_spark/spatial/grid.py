@@ -96,14 +96,16 @@ def build_polygon_layer(tracts: DataFrame) -> DataFrame:
 
     All native: the QQ explode, the aliquot box (:func:`_qq_box`) and
     the section offset.  Only the parse that produced ``qqs`` runs in
-    Python.
+    Python.  The other key columns are functions of ``trs`` (the parse
+    decomposes it), so a plain ``distinct`` over the exploded rows
+    yields one row per ``(trs, qq)`` and plans as hash aggregates.
     """
     valid = tracts.filter(
         F.col('twp_num').isNotNull() & F.col('rge_num').isNotNull()
         & F.col('sec_num').isNotNull())
     exploded = valid.select(
         'trs', 'twp_num', 'twp_ns', 'rge_num', 'rge_ew', 'sec_num',
-        F.explode('qqs').alias('qq')).dropDuplicates(['trs', 'qq'])
+        F.explode('qqs').alias('qq')).distinct()
 
     # Its own projection: the fold is interpreted and holds lambda
     # variables, so Spark would neither codegen it nor share it across

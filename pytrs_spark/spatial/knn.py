@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import lifecycle
 from ..datagen import X0, X1, Y0, Y1
 
 
@@ -164,6 +165,10 @@ def knn_section_corners(points: DataFrame, k: int = 4,
     'drop'``, the default) or raise (``'error'``, costs one extra
     count job); same handling for k > 4 points still unsafe past
     ``max_radius``.
+
+    For k <= 4 the output is a lazy plan.  For k > 4 each round's
+    finished part is a checkpoint (see :func:`lifecycle.checkpoint`
+    for its fault-tolerance trade-off).
     """
     from .grid import anchor_xy
 
@@ -183,62 +188,45 @@ def knn_section_corners(points: DataFrame, k: int = 4,
     radius = 2
     finished = []
     remaining = pts
-    prev = None     # previous round's persisted remainder
-    while radius <= max_radius:
-        staged = _topk_at_radius(remaining, k, radius)
-        # k <= 4 is provably complete at the first radius for every
-        # finite point -- no probe, no caching, loop runs once; the
-        # only rows left behind are non-finite, handled below.
-        if k <= 4 and radius == 2:
-            finished.append(staged.filter('_safe'))
-            remaining = staged.filter('NOT _safe') \
-                .select('image_id', 'x', 'y')
-            break
-        # Fault-tolerance trade-off (documented, deliberate): the
-        # localCheckpoint below truncates lineage into executor-local
-        # storage, so losing an executor before the final union fails
-        # the job instead of recomputing the lost part -- acceptable
-        # for this bounded (<= max_radius rounds) interactive loop;
-        # configure spark.checkpoint.dir and swap for reliable
-        # checkpoint() if running inside a long fault-sensitive job.
-        # Iterative-round cache hygiene: persist `staged` so the
-        # round's kernel runs ONCE (three consumers below), make the
-        # round's outputs self-contained -- the safe part via eager
-        # localCheckpoint, the remainder via persist + a FULL
-        # materialization (count, not isEmpty: isEmpty stops at the
-        # first non-empty partition and would leave holes that
-        # recompute through freed ancestors) -- then free `staged`
-        # AND the previous round's remainder.  Without the frees,
-        # every generation's blocks stay pinned until session end
-        # (bounded by max_radius, but pure waste: each finished part
-        # only needs ITS round's blocks until the final action, and
-        # the checkpoint decouples it from them).
-        staged = staged.persist()
-        finished.append(staged.filter('_safe').localCheckpoint())
-        nxt = staged.filter('NOT _safe') \
-            .select('image_id', 'x', 'y').persist()
-        n_remaining = nxt.count()
-        staged.unpersist()
-        if prev is not None:
-            prev.unpersist()
-        prev = remaining = nxt
-        if n_remaining == 0:
-            break
-        radius += 1
+    with lifecycle.scope() as s:
+        while radius <= max_radius:
+            staged = _topk_at_radius(remaining, k, radius)
+            # k <= 4 is provably complete at the first radius for
+            # every finite point -- no probe, no materialization, loop
+            # runs once; the only rows left behind are non-finite,
+            # handled below.
+            if k <= 4 and radius == 2:
+                finished.append(staged.filter('_safe'))
+                remaining = staged.filter('NOT _safe') \
+                    .select('image_id', 'x', 'y')
+                break
+            # `staged` is persisted so the round's kernel runs ONCE
+            # (three consumers below).  The safe part is a checkpoint,
+            # so the output needs none of this round's blocks; the
+            # remainder is persisted and fully materialized (count,
+            # not isEmpty: isEmpty stops at the first non-empty
+            # partition and would leave holes that recompute through
+            # freed ancestors), after which `staged` and the previous
+            # remainder are freed.
+            staged = s.persisted(staged)
+            finished.append(lifecycle.checkpoint(staged.filter('_safe')))
+            nxt = s.persisted(staged.filter('NOT _safe')
+                              .select('image_id', 'x', 'y'))
+            n_remaining = nxt.count()
+            s.free(staged)
+            s.free(remaining)
+            remaining = nxt
+            if n_remaining == 0:
+                break
+            radius += 1
 
-    if on_unresolved == 'error':
-        n_left = remaining.count()
-        if n_left:
-            if prev is not None:
-                prev.unpersist()
-            raise ValueError(
-                f'knn_section_corners: {n_left} rows unresolved '
-                f'(non-finite coords, or k={k} unsafe past radius '
-                f'{max_radius})')
-    # the output unions only the finished parts; the last remainder's
-    # blocks are no longer needed
-    if prev is not None:
-        prev.unpersist()
+        if on_unresolved == 'error':
+            n_left = remaining.count()
+            if n_left:
+                raise ValueError(
+                    f'knn_section_corners: {n_left} rows unresolved '
+                    f'(non-finite coords, or k={k} unsafe past radius '
+                    f'{max_radius})')
 
     out = finished[0]
     for part in finished[1:]:

@@ -14,8 +14,8 @@ round count on a high-diameter geometric graph shape.
 
 from pyspark.sql import functions as F
 
-from pytrs_spark.operators.textops import (_checkpoint_fresh,
-                                           connected_components)
+from pytrs_spark.lifecycle import checkpoint as _checkpoint_fresh
+from pytrs_spark.operators.textops import connected_components
 
 
 def _size_in_bytes(df):
@@ -70,7 +70,7 @@ def test_checkpoint_fresh_fallback_warns_once(spark, monkeypatch):
 
     import pytest
 
-    import pytrs_spark.operators.textops as t
+    import pytrs_spark.lifecycle as t
 
     def _boom(*_a, **_k):
         raise RuntimeError('injected reflection break')
@@ -80,11 +80,11 @@ def test_checkpoint_fresh_fallback_warns_once(spark, monkeypatch):
     monkeypatch.setattr(t, '_CKPT_STRIP_WARNED', False)
     base = spark.range(10)
     with pytest.warns(RuntimeWarning, match='stats-strip failed'):
-        out = t._checkpoint_fresh(base)
+        out = t.checkpoint(base)
     assert out.count() == 10  # degraded, not broken
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter('always')
-        out2 = t._checkpoint_fresh(base)
+        out2 = t.checkpoint(base)
     assert out2.count() == 10
     assert not [w for w in caught
                 if 'stats-strip failed' in str(w.message)]

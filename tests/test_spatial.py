@@ -114,6 +114,8 @@ def test_polygon_layer_plan_runs_only_the_parse_in_python(spark):
     args = udfs.apply(0).children()
     assert [args.apply(i).name() for i in range(args.length())] \
         == ['raw_desc']
+    assert 'SortAggregateExec' not in {
+        name for name, _ in final_plan_nodes(layer)}
 
 
 def test_tile_assignment_matches_bruteforce(spark, polygons, images):
