@@ -29,6 +29,7 @@ from ..plss import document as doc_kernel
 from ..plss import simplify as simplify_kernel
 from ..plss import tract as tract_kernel
 from ..plss import trs as trs_kernel
+from ..session import warm_python_workers
 
 
 def _ensure_parallelism(df: DataFrame, parallelism='auto') -> DataFrame:
@@ -40,7 +41,13 @@ def _ensure_parallelism(df: DataFrame, parallelism='auto') -> DataFrame:
     warehouse scale the input already has >= slots partitions and this
     is a no-op (no shuffle added).  ``parallelism=0`` disables;
     an int forces that partition count.
+
+    Every parse entry point runs this prologue, so it is also where a
+    session's Python worker pool is warmed (once, asynchronously; see
+    :func:`~pytrs_spark.session.warm_python_workers`), whatever
+    ``parallelism`` says.
     """
+    warm_python_workers(df.sparkSession)
     if parallelism == 0 or parallelism is None:
         return df
     sc = df.sparkSession.sparkContext

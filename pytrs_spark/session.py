@@ -106,8 +106,9 @@ def get_spark(app_name="pytrs_spark", cores=None, shuffle_partitions=None,
     overrides any conf set here (e.g. the 32 MB scan split or the
     64k-row Arrow batch).
 
-    Also starts :func:`_warm_python_workers_async` (disable with
-    ``SPARK_GRAFT_WARM_WORKERS=0``).
+    Starts no Python worker: a session that runs no Python stage never
+    forks the worker daemon.  The parse operators warm the pool when a
+    session plans its first parse (:func:`warm_python_workers`).
     """
     if cores is None:
         cores = default_cores()
@@ -172,25 +173,32 @@ def get_spark(app_name="pytrs_spark", cores=None, shuffle_partitions=None,
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    _warm_python_workers_async(spark, cores)
     return spark
 
 
-def _warm_python_workers_async(spark, cores):
+def warm_python_workers(spark):
     """Fire one trivial Arrow-UDF job in a background thread so the
-    Python worker daemon (numpy/pandas/pyarrow imports, ~1.5-2 s
-    serial) and the Arrow eval codepath spin up CONCURRENTLY with the
-    driver's own setup work (parquet listing, input prep) instead of
-    inside the first real UDF stage.  Overlapping independent jobs is
-    plain Spark scheduling; the first production stage then starts
-    with a hot worker pool.  Set ``SPARK_GRAFT_WARM_WORKERS=0`` to
-    disable.  Failures are swallowed: this is an optimization, never
-    a correctness dependency."""
-    if os.environ.get("SPARK_GRAFT_WARM_WORKERS", "1") == "0":
+    Python worker daemon (numpy/pandas/pyarrow and the parse kernels'
+    imports, ~1.5-2 s serial) and the Arrow eval codepath spin up
+    CONCURRENTLY with the driver's planning of the first parse instead
+    of inside its first task.
+
+    Trigger: the parse operators' shared prologue
+    (``operators.parse._ensure_parallelism``), once per context.  The
+    parse is the stage the pre-importing daemon (``daemon.py``) exists
+    for, so a session that plans a parse gets a hot pool and one that
+    plans none (image dedup, the native join tiers) never forks a
+    Python process.  Other Python stages start the pool on demand, as
+    plain Spark does.  Sizing: one task per ``sc.defaultParallelism``
+    slot, so every slot's worker is forked.  Failures are swallowed:
+    this is an optimization, never a correctness dependency."""
+    sc = spark.sparkContext
+    # The flag sits on the context: the pool belongs to its executors,
+    # whichever session object plans the parse.
+    if getattr(sc, "_pytrs_workers_warmed", False):
         return
-    if getattr(spark, "_pytrs_workers_warmed", False):
-        return
-    spark._pytrs_workers_warmed = True
+    sc._pytrs_workers_warmed = True
+    slots = sc.defaultParallelism
 
     def _warm():
         try:
@@ -201,9 +209,8 @@ def _warm_python_workers_async(spark, cores):
             def _wu(s):
                 return s
 
-            spark.sparkContext.setJobDescription(
-                "python-worker warmup (async)")
-            (spark.range(int(cores), numPartitions=int(cores))
+            sc.setJobDescription("python-worker warmup (async)")
+            (spark.range(slots, numPartitions=slots)
              .select(_wu("id").alias("x"))
              .write.format("noop").mode("overwrite").save())
         except Exception:  # noqa: BLE001

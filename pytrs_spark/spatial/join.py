@@ -22,8 +22,8 @@ Plan shape:
 Both join strategies use that index and that winner; they differ only
 in the join hint:
 
-- **broadcast** (default): the index is collected once and broadcast.
-  No image-side exchange, so a dense cell cannot skew it.
+- **broadcast** (default): the index is checkpointed once and
+  broadcast.  No image-side exchange, so a dense cell cannot skew it.
 - **shuffle** (``salt > 0``, or an index whose size estimate exceeds
   the prep cap): the index is never collected, and both sides meet in
   a ``merge``-hinted sort-merge join on ``cell``.  With salt S, images
@@ -34,6 +34,7 @@ in the join hint:
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import lifecycle
 from .grid import cover_cells
 
 JOIN_RES = 9   # 0.25 mi cells == depth-2 QQ size: ~1 candidate/point
@@ -146,10 +147,10 @@ def assign_tiles_fused(points: DataFrame, polygons: DataFrame,
       ``max_prep_bytes``: ``merge`` on ``(cell[, salt])``; the
       aggregate reuses the join's hash partitioning, so no second
       exchange runs.
-    - **Broadcast**, otherwise.  The index is collected once (memoized
-      on ``polygons``: build it once, stream images against it
-      forever) and re-created from Arrow, so its plan is a leaf, not
-      the layer's build.
+    - **Broadcast**, otherwise.  The index is built once into a
+      checkpoint (memoized on ``polygons``: build it once, stream
+      images against it forever), so its plan is a leaf, not the
+      layer's build, and its blocks are freed with the layer.
 
     No Python stage on either strategy.
     """
@@ -184,13 +185,12 @@ def assign_tiles_fused(points: DataFrame, polygons: DataFrame,
         index = index.hint('merge')
     else:
         if res not in memo:
-            # Collected and re-created from Arrow rather than cached in
-            # place: a cached plan keeps the layer's build (the parse
-            # UDF included) under every assignment's plan.
-            spark = polygons.sparkSession
-            memo[res] = spark.createDataFrame(
-                _cell_index(polygons, res, max_m).toArrow()).cache()
-            memo[res].count()
+            # A checkpoint, not a cache: its plan is a leaf, so the
+            # layer's build (the parse UDF included) stays out of every
+            # assignment's plan, and its blocks are freed with the layer
+            # instead of staying in the CacheManager for the session.
+            memo[res] = lifecycle.checkpoint(
+                _cell_index(polygons, res, max_m))
         index = F.broadcast(memo[res])
     cand = pts.join(index, keys) \
         .filter(_ray_cast_expr(max_m, F.col('x'), F.col('y')))

@@ -1,7 +1,11 @@
 """Session defaults derive from the host unless the env overrides them
-(no Spark session needed)."""
+(no Spark session needed), and a session starts its Python workers only
+when it plans a parse (one session, in a child process)."""
 
+import json
 import os
+import subprocess
+import sys
 
 from pytrs_spark.session import (default_cores, default_driver_memory,
                                  default_executor_memory)
@@ -59,3 +63,76 @@ def test_executor_memory_env_takes_precedence(monkeypatch, tmp_path):
     monkeypatch.setenv('SPARK_GRAFT_EXECUTOR_MEM', '2g')
     assert default_executor_memory('local-cluster[2,2,3072]',
                                    _meminfo(tmp_path, 16479424)) == '2g'
+
+
+# Runs in a child process so that its process tree is its own: the JVM
+# and, once started, the worker daemon and the workers it forks all
+# descend from the child; the daemon and its workers run with the
+# daemon module as an argument.
+_TRIGGER_PROBE = r'''
+import json, os, time
+from pytrs_spark.operators.parse import parse_documents_full
+from pytrs_spark.session import get_spark
+
+
+def daemons():
+    children = {}
+    for pid in filter(str.isdigit, os.listdir('/proc')):
+        try:
+            with open(f'/proc/{pid}/stat') as f:
+                ppid = int(f.read().rsplit(')', 1)[1].split()[1])
+        except OSError:
+            continue
+        children.setdefault(ppid, []).append(pid)
+    found, todo = [], [os.getpid()]
+    while todo:
+        for pid in children.get(int(todo.pop()), ()):
+            todo.append(pid)
+            try:
+                with open(f'/proc/{pid}/cmdline', 'rb') as f:
+                    # The module as its own argument: the JVM's command
+                    # line names it too, inside a --conf.
+                    if b'pytrs_spark.daemon' in f.read().split(b'\0'):
+                        found.append(pid)
+            except OSError:
+                pass
+    return found
+
+
+def poll(seconds):
+    end = time.monotonic() + seconds
+    while not daemons() and time.monotonic() < end:
+        time.sleep(0.2)
+    return len(daemons())
+
+
+spark = get_spark('trigger_probe', cores=1)
+try:
+    spark.range(1000).count()
+    native = poll(5)
+    docs = spark.createDataFrame(
+        [(1, 'T154N-R97W Sec 14: NE/4'), (2, 'T155N-R97W Sec 1: SW/4')],
+        'doc_id long, raw_desc string')
+    rows = parse_documents_full(docs).count()
+    parse = poll(5)
+finally:
+    spark.stop()
+print(json.dumps({'native': native, 'parse': parse, 'rows': rows}))
+'''
+
+
+def test_python_workers_start_with_the_first_parse():
+    """A native job forks no Python process in 5 s; planning a parse
+    starts the worker daemon."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM='1g',
+               PYTHONPATH=os.pathsep.join(
+                   p for p in (root, os.environ.get('PYTHONPATH')) if p))
+    env.pop('SPARK_GRAFT_MASTER', None)
+    out = subprocess.run([sys.executable, '-c', _TRIGGER_PROBE], cwd=root,
+                         env=env, capture_output=True, text=True,
+                         timeout=120)
+    assert out.returncode == 0, out.stderr[-2000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got['native'] == 0, got
+    assert got['parse'] >= 1 and got['rows'] == 2, got
